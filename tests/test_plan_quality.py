@@ -6,6 +6,8 @@ stages. Also: results must be independent of input partitioning."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,6 +87,54 @@ def test_near_dup_joins_are_not_cartesian(spark):
         plan = _plan(df)
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def _plan_nodes(node):
+    """Every physical node under ``node`` in a not-yet-executed plan,
+    descending into the adaptive plan's current physical plan."""
+    yield node
+    if node.nodeName() == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.executedPlan())
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+@pytest.mark.parametrize("family", ["minhash", "embedding"])
+def test_pair_dedup_exchange_carries_no_arrays(spark, family):
+    """Candidate pairs are verified inside the band join, so the
+    aggregate that drops duplicate (id_a, id_b) band collisions
+    carries only the ids and the scalar score: a HashAggregate with no
+    array column in its output. Carrying the shingle sets or vectors
+    through that exchange (first(sh_a)/first(va)) forces a
+    SortAggregate over whole arrays."""
+    from ungoliant_spark.operators.dedup import minhash_lsh_pairs
+    from ungoliant_spark.operators.similarity import embedding_near_dup_pairs
+
+    if family == "minhash":
+        df = minhash_lsh_pairs(spark.read.parquet(f"{SF}/documents.parquet"))
+    else:
+        df = embedding_near_dup_pairs(
+            spark.read.parquet(f"{SF}/embeddings.parquet"), threshold=0.5
+        )
+    root = df._jdf.queryExecution().executedPlan()
+    dedups = []
+    for node in _plan_nodes(root):
+        if "Aggregate" not in node.nodeName():
+            continue
+        keys = node.groupingExpressions()
+        names = {keys.apply(i).name() for i in range(keys.size())}
+        if names in ({"id_a", "id_b"}, {"rep_a", "rep_b"}):
+            dedups.append(node)
+    assert dedups, _plan(df)
+    for node in dedups:
+        assert node.nodeName() == "HashAggregate", node.toString()
+        fields = json.loads(node.schema().json())["fields"]
+        arrays = [
+            f["name"] for f in fields
+            if isinstance(f["type"], dict) and f["type"].get("type") == "array"
+        ]
+        assert not arrays, node.toString()
 
 
 def test_decisions_independent_of_partitioning(spark):

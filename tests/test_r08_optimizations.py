@@ -279,12 +279,11 @@ def test_ann_dimension_guard(spark):
         sim.embedding_near_dup_pairs(df, threshold=0.5).collect()
 
 
-def test_hamming_pairs_filter_first_equals_naive(spark):
-    """The r8 rewrite filters Hamming inside the band join (before
-    the de-duplicating exchange). Pin against a naive all-pairs
-    bit_count join on a hash table with heavy chunk skew (many words
-    sharing chunks without being near-dups — the case that produced
-    21.7M collision rows at sf0.1)."""
+def _skewed_words():
+    """300 words sharing one base word, each 0..5 random bit flips
+    away: heavy chunk skew (many words share chunks without being
+    near-dups — the case that produced 21.7M collision rows at
+    sf0.1)."""
     rng = random.Random(3)
     words = []
     base = 0x0123456789ABCD
@@ -293,6 +292,18 @@ def test_hamming_pairs_filter_first_equals_naive(spark):
         for _ in range(rng.randrange(0, 6)):  # 0..5 bit flips
             w ^= 1 << rng.randrange(63)
         words.append((f"id{i:03d}", w))
+    return words
+
+
+def _hamming(x, y):
+    return bin(x ^ y).count("1")
+
+
+def test_hamming_pairs_filter_first_equals_naive(spark):
+    """The r8 rewrite filters Hamming inside the band join (before
+    the de-duplicating exchange). Pin against a naive all-pairs
+    bit_count join on the skewed-chunk table."""
+    words = _skewed_words()
     hashed = spark.createDataFrame(words, "clip_id string, h long")
     got = {
         (r["id_a"], r["id_b"], r["hamming"])
@@ -302,8 +313,58 @@ def test_hamming_pairs_filter_first_equals_naive(spark):
     naive = set()
     for i, (ida, wa) in enumerate(words):
         for idb, wb in words[i + 1:]:
-            d = bin(wa ^ wb).count("1")
+            d = _hamming(wa, wb)
             if d <= 3:
                 a, b = min(ida, idb), max(ida, idb)
                 naive.add((a, b, d))
+    assert got == naive
+
+
+def test_hamming_components_on_skewed_chunks_equal_union_find(spark):
+    """hamming_components runs the same band join at the rep level;
+    its labels must equal a union-find (component minimum) over the
+    naive all-pairs Hamming ≤ 3 edges of the skewed-chunk table."""
+    words = _skewed_words()
+    hashed = spark.createDataFrame(words, "clip_id string, h long")
+    with dd.group_cache_scope():
+        got = {
+            r["clip_id"]: r["component_rep"]
+            for r in dd.hamming_components(hashed, "h", "clip_id").collect()
+        }
+    parent = {i: i for i, _ in words}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for i, (ida, wa) in enumerate(words):
+        for idb, wb in words[i + 1:]:
+            if _hamming(wa, wb) <= 3:
+                ra, rb = sorted((find(ida), find(idb)))
+                parent[rb] = ra
+    assert got == {i: find(i) for i, _ in words}
+
+
+def test_hamming_matches_on_skewed_chunks_equal_naive(spark):
+    """hamming_matches keeps its own bipartite band join: split the
+    skewed-chunk table into probe and reference halves; dup_of_ref
+    must be the naive minimum reference id within 3 bits (and
+    ref_hash that reference's word)."""
+    words = _skewed_words()
+    probe, ref = words[::2], words[1::2]
+    got = {
+        r["h"]: (r["dup_of_ref"], r["ref_hash"])
+        for r in dd.hamming_matches(
+            spark.createDataFrame(probe, "clip_id string, h long"),
+            spark.createDataFrame(ref, "clip_id string, h long"),
+            "h",
+            "clip_id",
+        ).collect()
+    }
+    naive = {}
+    for _, wp in probe:
+        near = [(rid, wr) for rid, wr in ref if _hamming(wp, wr) <= 3]
+        if near:
+            naive[wp] = min(near)
     assert got == naive

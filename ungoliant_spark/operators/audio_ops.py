@@ -43,7 +43,7 @@ N_FRAMES = 8
 # (band energies are integrals over many FFT bins). 63 bits, not 64,
 # so BIGINT arithmetic (xor/bit_count) agrees between Spark and the
 # DuckDB oracle without sign-bit traps — same convention as
-# dedup.simhash63. Measured at sf0.01 (20k clips, 451 planted
+# dedup.simhash63_table. Measured at sf0.01 (20k clips, 451 planted
 # near-dup pairs): planted Hamming p50 = 2, p95 = 4, max = 8; a
 # 20k-pair sample of unrelated clips bottoms out at 15 (p1 = 20) —
 # the default threshold 3 recalls 89% of plants with zero collisions.
@@ -567,7 +567,6 @@ def audio_dedup_against(
         new_fp.filter(F.col("decode_ok") & F.col("afp").isNotNull()),
         ref_fp,
         hash_col="afp",
-        id_col="clip_id",
         ref_id_col="clip_id",
         max_hamming=max_hamming,
     )

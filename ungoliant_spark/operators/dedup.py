@@ -16,6 +16,17 @@ All variants are pure Catalyst (no UDFs) and oracle-checkable:
 * SimHash (63-bit): per-token ±1 votes per bit; near-dups differ in
   few bits (query pairs at Hamming ≤ 3 via banding).
 
+Every near-dup family shares three private steps. :func:`_band_pairs`
+is the one banded candidate join: it explodes (band, key) keys,
+self-joins on them with ``a.id < b.id`` and verifies each family's
+score inside the join (SimHash/afp Hamming, MinHash Jaccard, and the
+SRP-LSH cosine of ``similarity.embedding_near_dup_pairs``).
+:func:`_expand_rep_pairs` turns representative pairs back into
+document pairs, and :func:`_rep_components` labels documents through
+connected components over the representative graph. Only the exact
+Jaccard family keeps its own prefix-filter join
+(:func:`_jaccard_rep_pairs`).
+
 Portable hashing: H(s) = first 15 hex chars of md5(s) as int (60
 bits, identical in Spark `conv` and DuckDB `::BIGINT` on 0x-hex) —
 chosen so the DuckDB oracle can recompute signatures bit-for-bit.
@@ -351,8 +362,141 @@ def _dup_groups(
     return out
 
 
+def _band_pairs(rows: DataFrame, keys: Column, score, keep) -> DataFrame:
+    """(id_a, id_b, score) with id_a < id_b — the banded candidate join
+    behind every near-dup family. ``rows`` is (id, payload...) and
+    ``keys`` an array<struct<band, key>> expression over it. The keys
+    are exploded and the rows self-joined on (band, key) with
+    ``a.id < b.id``; ``score(a, b)`` gets one accessor per side
+    (column name → that side's column), and ``keep(score)`` filters
+    INSIDE the join, before the exchange that drops the duplicate
+    (id_a, id_b) rows of pairs colliding in several bands.
+
+    Verifying first gives the identical output — the score is a
+    function of the pair, so dedup before or after the filter selects
+    the same rows — but keeps the collision volume and the payload
+    (shingle sets, vectors) out of that exchange: real fingerprint
+    chunks are heavily skewed (measured at sf0.1 audio: 21.7M
+    collision rows → 3.3k pairs). The join is keyed first on a column
+    named ``band``."""
+    banded = rows.select("*", F.inline(keys))
+    a, b = banded.alias("a"), banded.alias("b")
+    s = score(lambda c: F.col(f"a.{c}"), lambda c: F.col(f"b.{c}"))
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .filter(keep(s))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            s.alias("score"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _expand_rep_pairs(
+    groups: DataFrame, rep_pairs: DataFrame, score_col: str,
+    intra_score: Column, keep,
+) -> DataFrame:
+    """Document pairs (id_a, id_b, ``score_col``) from the dup-group
+    table (:func:`_dup_groups`) and its representative pairs
+    (id_a, id_b, score). Inter-group pairs inherit their reps' score;
+    groups are disjoint, so each unordered document pair occurs in
+    exactly one (rep_a, rep_b) product — no dedup. Intra-group pairs
+    (identical keys) all score ``intra_score`` and pass through the
+    same ``keep`` as the rep pairs, so a threshold no identical pair
+    meets (Jaccard > 1) drops them by constant folding."""
+    ga = groups.select(F.col("rep").alias("id_a"), F.col("ids").alias("ids_a"))
+    gb = groups.select(F.col("rep").alias("id_b"), F.col("ids").alias("ids_b"))
+    inter = (
+        rep_pairs.join(ga, "id_a").join(gb, "id_b")
+        .select(F.explode("ids_a").alias("x"), "ids_b", "score")
+        .select("x", F.explode("ids_b").alias("y"), "score")
+        .select(
+            F.least("x", "y").alias("id_a"),
+            F.greatest("x", "y").alias("id_b"),
+            F.col("score").alias(score_col),
+        )
+    )
+    intra_pairs = F.filter(
+        F.flatten(
+            F.transform(
+                F.col("ids"),
+                lambda x: F.transform(
+                    F.col("ids"),
+                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+                ),
+            )
+        ),
+        lambda p: p["id_a"] < p["id_b"],
+    )
+    intra = groups.filter((F.size("ids") > 1) & keep(intra_score)).select(
+        F.inline(intra_pairs), intra_score.alias(score_col)
+    )
+    return inter.unionByName(intra)
+
+
+def _rep_components(
+    per_doc: DataFrame,
+    key: str,
+    id_col: str,
+    rep_pairs,
+    max_iterations: int,
+    extras: tuple[str, ...] = (),
+) -> DataFrame:
+    """(``id_col``, component_rep) for ``per_doc`` = (id, ``key``,
+    ``extras``...) with NO doc-level pair list: docs map to the min-id
+    rep of their ``key`` value (groupBy-min + join — no collect_list,
+    so no cap and no edge lost to suppression), ``rep_pairs`` maps the
+    rep table (id, key, extras — each extra the per-group min, which
+    for a function of the key is the shared value) to its (id_a, id_b,
+    ...) edges, and :func:`near_dup_components` labels the rep graph; doc
+    labels follow by one join. Correct whenever identical keys are
+    near-dups of each other and the edge predicate depends only on the
+    keys: every doc-level edge is then intra-group (captured by the
+    doc→rep mapping) or inherited from a rep edge, so doc components
+    are exactly the expansion of rep components.
+
+    Both tables are persisted through :func:`_persist_groups`: the
+    per-doc table feeds the rep build and the doc→rep join, and
+    recomputing it repeats the whole upstream (for acoustic
+    fingerprints, the decode — measured: 200k clips decoded twice);
+    the reps feed the doc→rep join, both sides of the rep-pair join
+    and the node set. The propagation loop runs eagerly and
+    materializes both, so the final join is a pure cache read."""
+    per_doc = _persist_groups(per_doc)
+    reps = _persist_groups(
+        per_doc.groupBy(key).agg(
+            F.min("id").alias("rep"), *[F.min(c).alias(c) for c in extras]
+        )
+    )
+    doc_rep = (
+        per_doc.select("id", key)
+        .join(reps.select(key, "rep"), key)
+        .select(F.col("id").alias(id_col), "rep")
+    )
+    rep_comp = near_dup_components(
+        reps.select("rep"),
+        rep_pairs(reps.withColumnRenamed("rep", "id")),
+        id_col="rep",
+        max_iterations=max_iterations,
+    )
+    return doc_rep.join(rep_comp, "rep").select(id_col, "component_rep")
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """Exact Jaccard of two distinct-element arrays, rounded to 6 dp."""
+    inter = F.size(F.array_intersect(a, b))
+    return F.round(inter.cast("double") / (F.size(a) + F.size(b) - inter), 6)
+
+
 def _jaccard_rep_pairs(rep_sets: DataFrame, threshold: float) -> DataFrame:
-    """(rep_a, rep_b, jaccard) over ``rep_sets`` = (id, sh) with one
+    """(id_a, id_b, score = jaccard) over ``rep_sets`` = (id, sh) with one
     row per DISTINCT (sorted) shingle set — the representative-level
     exact similarity join shared by :func:`jaccard_pairs` and
     :func:`jaccard_components`.
@@ -383,30 +527,16 @@ def _jaccard_rep_pairs(rep_sets: DataFrame, threshold: float) -> DataFrame:
     cand = (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
                & (F.col("a.id") < F.col("b.id")) & size_ok)
-        .select(F.col("a.id").alias("rep_a"), F.col("b.id").alias("rep_b"))
-        .dropDuplicates(["rep_a", "rep_b"])
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
     )
-    va = with_len.select(
-        F.col("id").alias("rep_a"), F.col("sh").alias("sh_a"),
-        F.col("sz").alias("size_a"),
-    )
-    vb = with_len.select(
-        F.col("id").alias("rep_b"), F.col("sh").alias("sh_b"),
-        F.col("sz").alias("size_b"),
-    )
-    inter_sz = F.size(F.array_intersect("sh_a", "sh_b"))
+    va = rep_sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    vb = rep_sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     return (
-        cand.join(va, "rep_a").join(vb, "rep_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                inter_sz.cast("double")
-                / (F.col("size_a") + F.col("size_b") - inter_sz),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("rep_a", "rep_b", "jaccard")
+        cand.join(va, "id_a").join(vb, "id_b")
+        .withColumn("score", _jaccard(F.col("sh_a"), F.col("sh_b")))
+        .filter(F.col("score") >= F.lit(threshold))
+        .select("id_a", "id_b", "score")
     )
 
 
@@ -450,79 +580,28 @@ def jaccard_pairs(
     # without this). One row per DISTINCT shingle set — orders of
     # magnitude smaller than the input scan + explode it replaces.
     groups = _dup_groups(sh0, "sh", "id", max_cluster_size)
-    # representative-level exact pair scores — see _jaccard_rep_pairs
     rep_pairs = _jaccard_rep_pairs(
         groups.select(F.col("rep").alias("id"), "sh"), threshold
     )
-    # expand inter-group pairs (each unordered doc pair occurs in
-    # exactly one (rep_a, rep_b) product — no dedup needed)
-    ga = groups.select(F.col("rep").alias("rep_a"), F.col("ids").alias("ids_a"))
-    gb = groups.select(F.col("rep").alias("rep_b"), F.col("ids").alias("ids_b"))
-    inter = (
-        rep_pairs.join(ga, "rep_a").join(gb, "rep_b")
-        .select(F.explode("ids_a").alias("x"), "ids_b", "jaccard")
-        .select("x", F.explode("ids_b").alias("y"), "jaccard")
-        .select(
-            F.least("x", "y").alias("id_a"),
-            F.greatest("x", "y").alias("id_b"),
-            "jaccard",
-        )
+    # identical shingle sets → intra-group Jaccard exactly 1.0
+    return _expand_rep_pairs(
+        groups, rep_pairs, "jaccard", F.lit(1.0), lambda j: j >= threshold
     )
-    # intra-group pairs: identical shingle sets → Jaccard exactly 1.0
-    intra_pairs = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x: F.transform(
-                    F.col("ids"),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        ),
-        lambda p: p["id_a"] < p["id_b"],
-    )
-    intra = (
-        groups.filter(F.size("ids") > 1)
-        .select(F.explode(intra_pairs).alias("p"))
-        .select(
-            F.col("p.id_a").alias("id_a"),
-            F.col("p.id_b").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    if threshold > 1.0:
-        intra = intra.filter(F.lit(False))
-    return inter.unionByName(intra)
 
 
-def minhash_signature(text: Column, n: int = 3) -> Column:
-    """array<long> of N_PERMS minhash values over shingle hashes."""
-    hashes = shingles_of(text, n)
-    sig = []
-    for a_c, b_c in PERMS:
-        sig.append(
-            F.aggregate(
-                hashes,
-                F.lit(MERSENNE).cast("long"),
-                lambda acc, h: F.least(
-                    acc,
-                    (F.lit(a_c) * (h % F.lit(MERSENNE)) + F.lit(b_c))
-                    % F.lit(MERSENNE),
-                ),
-            )
-        )
-    return F.array(*sig)
+SIG_COLS = tuple(f"s{i}" for i in range(N_PERMS))
 
 
 def _minhash_per_doc(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """(id, shingles, s0..s{N_PERMS-1}): explode shingle hashes once,
-    then ONE hash-aggregate computes all N_PERMS signature minima AND
-    the sorted shingle set — whole-stage-codegen column exprs with
-    map-side partial aggregation (the nested `aggregate` folds over
-    arrays were interpreted per element: measured 10× slower at
-    sf0.1). Same math as minhash_signature()."""
+    """(id, shingles, SIG_COLS...): explode shingle hashes once, then
+    ONE hash-aggregate computes all N_PERMS signature minima — s_i =
+    min over shingle hashes h of (a_i·(h mod p) + b_i) mod p, p =
+    MERSENNE, (a_i, b_i) = PERMS[i] — AND the sorted shingle set:
+    whole-stage-codegen column exprs with map-side partial
+    aggregation (per-row nested `aggregate` folds over the arrays were
+    interpreted per element: measured 10× slower at sf0.1)."""
     ex = df.select(
         F.col(id_col).alias("id"),
         F.explode(shingles_of(F.col(text_col), n)).alias("h"),
@@ -531,73 +610,31 @@ def _minhash_per_doc(
         F.min(
             (F.lit(a_c) * (F.col("h") % F.lit(MERSENNE)) + F.lit(b_c))
             % F.lit(MERSENNE)
-        ).alias(f"s{i}")
-        for i, (a_c, b_c) in enumerate(PERMS)
+        ).alias(s)
+        for s, (a_c, b_c) in zip(SIG_COLS, PERMS)
     ]
     return ex.groupBy("id").agg(
         F.array_sort(F.collect_set("h")).alias("shingles"), *sig_cols
     )
 
 
-def _minhash_rep_pairs(rep_sigs: DataFrame, threshold: float) -> DataFrame:
-    """(rep_a, rep_b, jaccard) over ``rep_sigs`` = (id, shingles,
-    s0..s{N_PERMS-1}) with one row per DISTINCT shingle set — the
-    representative-level LSH band join + exact-Jaccard verification
-    shared by :func:`minhash_lsh_pairs` and
-    :func:`minhash_components`. The join key is the band hash —
-    sub-quadratic at scale; survivors are verified with the true
-    Jaccard on the full sets."""
+def _minhash_band_keys() -> Column:
+    """The N_BANDS LSH keys over the signature columns SIG_COLS: one
+    (band, hash of the band's rows_per_band minima) struct per band."""
     rows_per_band = N_PERMS // N_BANDS
-    bands = rep_sigs.select(
-        "id",
-        "shingles",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        hash64(
-                            F.concat_ws(
-                                "_",
-                                *[
-                                    F.col(f"s{bi * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bkey"),
+    return F.array(
+        *[
+            F.struct(
+                F.lit(bi).alias("band"),
+                hash64(
+                    F.concat_ws(
+                        "_",
+                        *SIG_COLS[bi * rows_per_band:(bi + 1) * rows_per_band],
                     )
-                    for bi in range(N_BANDS)
-                ]
+                ).alias("key"),
             )
-        ).alias("bh"),
-    ).select(
-        "id",
-        "shingles",
-        F.col("bh.band").alias("band"),
-        F.col("bh.bkey").alias("bkey"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("rep_a"),
-            F.col("b.id").alias("rep_b"),
-            F.col("a.shingles").alias("sh_a"),
-            F.col("b.shingles").alias("sh_b"),
-        )
-        .dropDuplicates(["rep_a", "rep_b"])
-    )
-    isz = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - isz
-    return (
-        cand.withColumn("jaccard", F.round(isz.cast("double") / union, 6))
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("rep_a", "rep_b", "jaccard")
+            for bi in range(N_BANDS)
+        ]
     )
 
 
@@ -624,93 +661,53 @@ def minhash_lsh_pairs(
     # 4 consumers, exchange reuse can't unify (see jaccard_pairs);
     # the signature is a function of the shingle set, so min() over a
     # same-set group just selects the shared value
-    groups = _dup_groups(
-        per_doc,
-        "shingles",
-        "id",
-        max_cluster_size,
-        tuple(f"s{i}" for i in range(N_PERMS)),
+    groups = _dup_groups(per_doc, "shingles", "id", max_cluster_size, SIG_COLS)
+    rep_pairs = _band_pairs(
+        groups.select(F.col("rep").alias("id"), "shingles", *SIG_COLS),
+        _minhash_band_keys(),
+        lambda a, b: _jaccard(a("shingles"), b("shingles")),
+        lambda j: j >= threshold,
     )
-    rep_pairs = _minhash_rep_pairs(
-        groups.select(
-            F.col("rep").alias("id"),
-            "shingles",
-            *[f"s{i}" for i in range(N_PERMS)],
-        ),
-        threshold,
+    # identical shingle sets → intra-group Jaccard exactly 1.0
+    return _expand_rep_pairs(
+        groups, rep_pairs, "jaccard", F.lit(1.0), lambda j: j >= threshold
     )
-    # inter-group expansion (groups disjoint → each pair exactly once)
-    ga = groups.select(F.col("rep").alias("rep_a"), F.col("ids").alias("ids_a"))
-    gb = groups.select(F.col("rep").alias("rep_b"), F.col("ids").alias("ids_b"))
-    inter = (
-        rep_pairs.join(ga, "rep_a").join(gb, "rep_b")
-        .select(F.explode("ids_a").alias("x"), "ids_b", "jaccard")
-        .select("x", F.explode("ids_b").alias("y"), "jaccard")
-        .select(
-            F.least("x", "y").alias("id_a"),
-            F.greatest("x", "y").alias("id_b"),
-            "jaccard",
-        )
-    )
-    # intra-group pairs: identical shingle sets → Jaccard exactly 1.0
-    intra_pairs = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x: F.transform(
-                    F.col("ids"),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        ),
-        lambda p: p["id_a"] < p["id_b"],
-    )
-    intra = (
-        groups.filter(F.size("ids") > 1)
-        .select(F.explode(intra_pairs).alias("p"))
-        .select(
-            F.col("p.id_a").alias("id_a"),
-            F.col("p.id_b").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    if threshold > 1.0:
-        intra = intra.filter(F.lit(False))
-    return inter.unionByName(intra)
-
-
-def simhash63(text: Column) -> Column:
-    """63-bit SimHash over token-occurrence hashes (sign bit avoided
-    so Spark and the SQL oracle agree on BIGINT arithmetic).
-
-    Per-row expression form (used where a column is required); for
-    table-scale computation prefer :func:`simhash63_table`, whose
-    explode + codegen'd groupBy shape is ~10× faster than the 63
-    interpreted aggregate folds here."""
-    toks = tokens_of(text)
-    hs = F.transform(toks, lambda t: hash64(t))
-    bits = []
-    for b in range(63):
-        vote = F.aggregate(
-            hs,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(
-                F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-            ).otherwise(F.lit(-1)),
-        )
-        bits.append(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = bits[0]
-    for c in bits[1:]:
-        out = out + c
-    return out
 
 
 SIMHASH_BANDS = [(0, 16), (16, 16), (32, 16), (48, 15)]  # offset, width
+
+
+def _hamming_band_keys(word: Column) -> Column:
+    """The SIMHASH_BANDS pigeonhole keys of a 63-bit word: one (band,
+    chunk value) struct per band. Two words within Hamming
+    ``len(SIMHASH_BANDS) - 1`` differ in at most that many chunks, so
+    they share at least one key — banding is lossless up to that
+    bound (see :func:`_check_lossless`)."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(bi).alias("band"),
+                F.shiftright(word, off)
+                .bitwiseAND(F.lit((1 << width) - 1))
+                .alias("key"),
+            )
+            for bi, (off, width) in enumerate(SIMHASH_BANDS)
+        ]
+    )
+
+
+def _check_lossless(max_hamming: int) -> None:
+    if max_hamming > len(SIMHASH_BANDS) - 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} exceeds the lossless bound "
+            f"{len(SIMHASH_BANDS) - 1} of {len(SIMHASH_BANDS)}-band "
+            "pigeonhole candidate generation; results would silently "
+            "miss pairs. Add bands (SIMHASH_BANDS) to raise the bound."
+        )
+
+
+def _hamming(x: Column, y: Column) -> Column:
+    return F.bit_count(x.bitwiseXOR(y))
 
 
 def simhash_pairs(
@@ -753,136 +750,18 @@ def hamming_pairs(
     :func:`simhash_pairs` (text) and audio_ops.audio_dup_pairs
     (acoustic fingerprints). Lossless banded LSH + the degenerate-
     bucket hardening documented on :func:`simhash_pairs`."""
-    if max_hamming > len(SIMHASH_BANDS) - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the lossless bound "
-            f"{len(SIMHASH_BANDS) - 1} of {len(SIMHASH_BANDS)}-band "
-            "pigeonhole candidate generation; results would silently "
-            "miss pairs. Add bands (SIMHASH_BANDS) to raise the bound."
-        )
+    _check_lossless(max_hamming)
     # 4 consumers, exchange reuse can't unify (see jaccard_pairs)
     groups = _dup_groups(hashed, hash_col, id_col, max_cluster_size)
-    banded = groups.select(
-        F.col("rep").alias("id"),
-        hash_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftright(F.col(hash_col), off)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for bi, (off, width) in enumerate(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("bh"),
-    ).select(
-        "id",
-        hash_col,
-        F.col("bh.band").alias("band"),
-        F.col("bh.chunk").alias("chunk"),
+    rep_pairs = _band_pairs(
+        groups.select(F.col("rep").alias("id"), hash_col),
+        _hamming_band_keys(F.col(hash_col)),
+        lambda a, b: _hamming(a(hash_col), b(hash_col)),
+        lambda d: d <= max_hamming,
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    # Hamming filter BEFORE the de-duplicating exchange (guide §2.3):
-    # real fingerprint chunks are heavily skewed, so band collisions
-    # vastly outnumber true pairs (measured at sf0.1 audio: 21.7M
-    # collision rows → 3.3k pairs). Filtering inside the band join
-    # keeps the collision volume out of the dropDuplicates shuffle —
-    # only verified pairs (≤ N_BANDS copies each) are exchanged.
-    # Identical output: hamming is a function of the pair, so dedup
-    # before or after the filter selects the same rows.
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(
-            F.bit_count(
-                F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
-            )
-            <= max_hamming
-        )
-        .select(
-            F.col("a.id").alias("rep_a"),
-            F.col("b.id").alias("rep_b"),
-            F.bit_count(
-                F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
-            )
-            .cast("int")
-            .alias("hamming"),
-        )
-        .dropDuplicates(["rep_a", "rep_b"])
-    )
-    rep_pairs = cand
-    # inter-group expansion: groups are disjoint, so each unordered doc
-    # pair occurs in exactly one (rep_a, rep_b) product — no dedup
-    ga = groups.select(F.col("rep").alias("rep_a"), F.col("ids").alias("ids_a"))
-    gb = groups.select(F.col("rep").alias("rep_b"), F.col("ids").alias("ids_b"))
-    inter = (
-        rep_pairs.join(ga, "rep_a").join(gb, "rep_b")
-        .select(F.explode("ids_a").alias("x"), "ids_b", "hamming")
-        .select("x", F.explode("ids_b").alias("y"), "hamming")
-        .select(
-            F.least("x", "y").alias("id_a"),
-            F.greatest("x", "y").alias("id_b"),
-            "hamming",
-        )
-    )
-    # intra-group pairs: identical simhash → Hamming exactly 0
-    intra_pairs = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x: F.transform(
-                    F.col("ids"),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        ),
-        lambda p: p["id_a"] < p["id_b"],
-    )
-    intra = (
-        groups.filter(F.size("ids") > 1)
-        .select(F.explode(intra_pairs).alias("p"))
-        .select(
-            F.col("p.id_a").alias("id_a"),
-            F.col("p.id_b").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return inter.unionByName(intra)
-
-
-def _banded_chunks(df: DataFrame, hash_col: str, keep: list[str]) -> DataFrame:
-    """Explode a 63-bit hash into its (band, chunk) pigeonhole keys
-    (SIMHASH_BANDS), keeping ``keep`` columns alongside — the shared
-    candidate-key generator for the self-join (hamming_pairs) and
-    bipartite (hamming_matches) forms."""
-    return df.select(
-        *keep,
-        hash_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftright(F.col(hash_col), off)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for bi, (off, width) in enumerate(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("bh"),
-    ).select(
-        *keep,
-        hash_col,
-        F.col("bh.band").alias("band"),
-        F.col("bh.chunk").alias("chunk"),
+    # identical hash words → intra-group Hamming exactly 0
+    return _expand_rep_pairs(
+        groups, rep_pairs, "hamming", F.lit(0), lambda d: d <= max_hamming
     )
 
 
@@ -890,7 +769,6 @@ def hamming_matches(
     probe: DataFrame,
     ref: DataFrame,
     hash_col: str,
-    id_col: str,
     ref_id_col: str,
     max_hamming: int = 3,
 ) -> DataFrame:
@@ -906,30 +784,24 @@ def hamming_matches(
     min id per hash, which preserves the global min because min over
     refs = min over per-hash minima); candidates are (band, chunk)
     collisions only — no cartesian product, and the reference corpus
-    is never re-scanned per probe."""
-    if max_hamming > len(SIMHASH_BANDS) - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the lossless bound "
-            f"{len(SIMHASH_BANDS) - 1} of {len(SIMHASH_BANDS)}-band "
-            "pigeonhole candidate generation; results would silently "
-            "miss pairs. Add bands (SIMHASH_BANDS) to raise the bound."
-        )
-    probe_fp = probe.select(F.col(hash_col)).distinct()
-    ref_fp = ref.groupBy(hash_col).agg(
-        F.min(ref_id_col).alias("ref_id")
+    is never re-scanned per probe. Unlike :func:`_band_pairs` the join
+    is bipartite (no id order) and de-duplicates on (hash, ref_id)."""
+    _check_lossless(max_hamming)
+    keys = F.inline(_hamming_band_keys(F.col(hash_col)))
+    pb = probe.select(F.col(hash_col)).distinct().select("*", keys).alias("p")
+    rb = (
+        ref.groupBy(hash_col).agg(F.min(ref_id_col).alias("ref_id"))
+        .select("*", keys)
+        .alias("r")
     )
-    pb = _banded_chunks(probe_fp, hash_col, []).alias("p")
-    rb = _banded_chunks(ref_fp, hash_col, ["ref_id"]).alias("r")
     cand = (
         pb.join(
             rb,
             (F.col("p.band") == F.col("r.band"))
-            & (F.col("p.chunk") == F.col("r.chunk")),
+            & (F.col("p.key") == F.col("r.key")),
         )
         .filter(
-            F.bit_count(
-                F.col(f"p.{hash_col}").bitwiseXOR(F.col(f"r.{hash_col}"))
-            )
+            _hamming(F.col(f"p.{hash_col}"), F.col(f"r.{hash_col}"))
             <= max_hamming
         )
         .select(
@@ -948,10 +820,13 @@ def hamming_matches(
 def simhash63_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, simhash): explode token hashes once, compute all 63 bit
+    """(id, simhash): 63-bit SimHash over token-occurrence hashes
+    (sign bit avoided so Spark and the SQL oracle agree on BIGINT
+    arithmetic). Explodes token hashes once, computes all 63 ±1 bit
     votes as codegen'd aggregate columns in ONE hash-aggregate with
-    map-side combine, assemble the word in a projection. Documents
-    with zero tokens get simhash 0 (left join back to the id set)."""
+    map-side combine (~10× faster than 63 interpreted per-row array
+    folds), and assembles the word in a projection. Documents with
+    zero tokens get simhash 0 (left join back to the id set)."""
     ex = df.select(
         F.col(id_col),
         F.explode(F.transform(tokens_of(F.col(text_col)), hash64)).alias("h"),
@@ -987,8 +862,11 @@ def simhash63_table(
 # convergence job PER ROUND of pure scheduling latency even when the
 # touched graph is a few thousand rows (near-dup graphs are tiny
 # relative to the corpus: sf0.1 simhash = 512 edges out of 600k docs).
-# 1M edges ≈ tens of MB collected — bounded driver memory, same
-# discipline as curation.MAX_OFFSET_ROWS. Above the cap the
+# With long ids, 1M edges is tens of MB collected — bounded driver
+# memory, same discipline as curation.MAX_OFFSET_ROWS. String ids
+# (clip_id) cost more: the union-find dict holds one Python str per
+# node, so the footprint grows with id length, and that cost has not
+# been measured. Above the cap the
 # distributed loop runs unchanged (crawl-scale correctness path).
 # The env var sets the default once, at import; each call reads the
 # module attribute, so tests force either path by monkeypatching it.
@@ -1286,75 +1164,19 @@ def hamming_components(
     :func:`simhash_components` for the rep-graph correctness argument
     (Hamming 0 iff identical hash, so doc components are exactly the
     expansion of rep components)."""
-    if max_hamming > len(SIMHASH_BANDS) - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the lossless bound "
-            f"{len(SIMHASH_BANDS) - 1} of {len(SIMHASH_BANDS)}-band "
-            "pigeonhole candidate generation; results would silently "
-            "miss pairs. Add bands (SIMHASH_BANDS) to raise the bound."
-        )
-    # persist the NARROW (id, hash) input too: it feeds both the rep
-    # build and the final doc→rep join, and recomputing it means a
-    # second full pass over the upstream DAG — for acoustic
-    # fingerprints that upstream is the whole decode (measured: the
-    # un-persisted form decoded 200k clips twice). The propagation
-    # loop below runs eagerly and materializes `reps`, which populates
-    # this cache as a side effect, so the later doc_rep join is a pure
-    # cache read — no race, no extra job. Released with the group
-    # tables (unpersist_group_tables / group_cache_scope).
-    hashed = _persist_groups(hashed.select(id_col, hash_col))
-    # persisted: feeds the doc→rep join, the banded self-join (twice)
-    # and the component node set; released by unpersist_group_tables
-    reps = _persist_groups(
-        hashed.groupBy(hash_col).agg(F.min(id_col).alias("rep"))
-    )
-    doc_rep = hashed.join(reps, hash_col).select(id_col, "rep")
-    banded = reps.select(
-        "rep",
+    _check_lossless(max_hamming)
+    return _rep_components(
+        hashed.select(F.col(id_col).alias("id"), hash_col),
         hash_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftright(F.col(hash_col), off)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for bi, (off, width) in enumerate(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("bh"),
-    ).select(
-        "rep",
-        hash_col,
-        F.col("bh.band").alias("band"),
-        F.col("bh.chunk").alias("chunk"),
+        id_col,
+        lambda reps: _band_pairs(
+            reps,
+            _hamming_band_keys(F.col(hash_col)),
+            lambda a, b: _hamming(a(hash_col), b(hash_col)),
+            lambda d: d <= max_hamming,
+        ),
+        max_iterations,
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.rep") < F.col("b.rep")),
-        )
-        .filter(
-            F.bit_count(
-                F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
-            )
-            <= max_hamming
-        )
-        .select(
-            F.col("a.rep").alias("id_a"), F.col("b.rep").alias("id_b")
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    rep_nodes = reps.select(F.col("rep"))
-    rep_comp = near_dup_components(
-        rep_nodes, rep_pairs, id_col="rep", max_iterations=max_iterations
-    )
-    return doc_rep.join(rep_comp, "rep").select(id_col, "component_rep")
 
 
 def exact_dedup_against(
@@ -1495,41 +1317,19 @@ def minhash_components(
     (/root/reference/src/transformers/lsh.rs:10-51) — clustering is
     that downstream, specified fresh here Spark-first."""
     _check_component_threshold(threshold)
-    # persist the per-doc signature table: it feeds the rep build AND
-    # the doc→rep join, and recomputing it repeats the full shingle
-    # explode + 16-permutation aggregation. The eager propagation loop
-    # materializes reps first, populating this cache for the later
-    # join (same pattern as hamming_components).
-    per_doc = _persist_groups(_minhash_per_doc(df, id_col, text_col, n))
-    # persisted: feeds the doc→rep join, the rep-pair band join
-    # (twice) and the component node set; released by
-    # unpersist_group_tables / group_cache_scope
-    reps = _persist_groups(
-        per_doc.groupBy("shingles").agg(
-            F.min("id").alias("rep"),
-            # the signature is a function of the shingle set, so min()
-            # over a same-set group just selects the shared value
-            *[F.min(f"s{i}").alias(f"s{i}") for i in range(N_PERMS)],
-        )
-    )
-    doc_rep = (
-        per_doc.select("id", "shingles")
-        .join(reps.select("shingles", "rep"), "shingles")
-        .select(F.col("id").alias(id_col), "rep")
-    )
-    rep_pairs = _minhash_rep_pairs(
-        reps.select(
-            F.col("rep").alias("id"),
-            F.col("shingles"),
-            *[f"s{i}" for i in range(N_PERMS)],
+    return _rep_components(
+        _minhash_per_doc(df, id_col, text_col, n),
+        "shingles",
+        id_col,
+        lambda reps: _band_pairs(
+            reps,
+            _minhash_band_keys(),
+            lambda a, b: _jaccard(a("shingles"), b("shingles")),
+            lambda j: j >= threshold,
         ),
-        threshold,
-    ).select(F.col("rep_a").alias("id_a"), F.col("rep_b").alias("id_b"))
-    rep_comp = near_dup_components(
-        reps.select("rep"), rep_pairs, id_col="rep",
-        max_iterations=max_iterations,
+        max_iterations,
+        SIG_COLS,
     )
-    return doc_rep.join(rep_comp, "rep").select(id_col, "component_rep")
 
 
 def jaccard_components(
@@ -1553,26 +1353,13 @@ def jaccard_components(
     the same reason: Jaccard depends only on the shingle sets, and
     identical sets are J = 1 ≥ threshold dups of their rep."""
     _check_component_threshold(threshold)
-    # persisted: the shingle-set table feeds the rep build AND the
-    # doc→rep join — without the cache the whole shingle hashing runs
-    # twice (same pattern as hamming_components/minhash_components)
-    sh0 = _persist_groups(
+    return _rep_components(
         df.select(
             F.col(id_col).alias("id"),
             F.array_sort(shingles_of(F.col(text_col), n)).alias("sh"),
-        )
+        ),
+        "sh",
+        id_col,
+        lambda reps: _jaccard_rep_pairs(reps, threshold),
+        max_iterations,
     )
-    # persisted: doc→rep join + both sides of the prefix self-join +
-    # component node set; released by unpersist_group_tables
-    reps = _persist_groups(
-        sh0.groupBy("sh").agg(F.min("id").alias("rep"))
-    )
-    doc_rep = sh0.join(reps, "sh").select(F.col("id").alias(id_col), "rep")
-    rep_pairs = _jaccard_rep_pairs(
-        reps.select(F.col("rep").alias("id"), "sh"), threshold
-    ).select(F.col("rep_a").alias("id_a"), F.col("rep_b").alias("id_b"))
-    rep_comp = near_dup_components(
-        reps.select("rep"), rep_pairs, id_col="rep",
-        max_iterations=max_iterations,
-    )
-    return doc_rep.join(rep_comp, "rep").select(id_col, "component_rep")

@@ -14,7 +14,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ungoliant_spark.operators.dedup import let_
+from ungoliant_spark.operators.dedup import _band_pairs, let_
 
 DIM = 64
 N_PLANES = 4  # per table: 2^4 buckets
@@ -118,7 +118,9 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b, sim ≥ threshold),
-    restricted to multi-table LSH bucket collisions.
+    restricted to multi-table LSH bucket collisions: the shared band
+    join (dedup._band_pairs) keyed on (table, bucket), with the cosine
+    verified inside the join.
 
     Near-dups have cosine ≈ 1 and agree on every random hyperplane
     sign with high probability, so they collide in some table almost
@@ -129,34 +131,21 @@ def embedding_near_dup_pairs(
     restriction, so the driver hash-check verifies this exact
     algorithm; recall vs. the exact baseline is asserted in
     tests/test_similarity_dedup.py."""
-    keyed = embeddings.select(
-        F.col(id_col).alias("id"),
-        _as_double(F.col(vec_col)).alias("v"),
-        F.explode(lsh_keys(F.col(vec_col))).alias("key"),
+    rows = embeddings.select(
+        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
     ).withColumn("n", norm(F.col("v")))
-    a = keyed.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"),
-        F.col("n").alias("na"), "key",
-    )
-    b = keyed.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"),
-        F.col("n").alias("nb"), "key",
-    )
-    pairs = (
-        a.join(b, "key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    keys = F.transform(
+        lsh_keys(F.col("v")),
+        lambda k: F.struct(k["table"].alias("band"), k["bucket"].alias("key")),
     )
     # norms precomputed per row pre-join (see cosine_topk) —
     # bit-identical to the inline cosine
-    sim = F.round(
-        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-    )
-    return (
-        pairs.withColumn("sim", sim)
-        .filter(F.col("sim") >= F.lit(threshold))
-        .select("id_a", "id_b", "sim")
-    )
+    return _band_pairs(
+        rows,
+        keys,
+        lambda a, b: F.round(dot(a("v"), b("v")) / (a("n") * b("n")), 6),
+        lambda sim: sim >= F.lit(threshold),
+    ).select("id_a", "id_b", F.col("score").alias("sim"))
 
 
 def embedding_near_dup_pairs_exact(
@@ -181,17 +170,6 @@ def embedding_near_dup_pairs_exact(
         .filter(F.col("sim") >= F.lit(threshold))
         .select("id_a", "id_b", "sim")
     )
-
-
-def lsh_bucket(vec: Column, planes: list[list[float]] | None = None) -> Column:
-    """Sign-random-projection bucket id (0..2^N_PLANES-1)."""
-    planes = planes or PLANES
-    out = F.lit(0)
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(x) for x in plane])
-        s = dot(_as_double(vec), p)
-        out = out + F.when(s > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return out
 
 
 def _bucket_of(v: Column, planes: list[list[float]]) -> Column:

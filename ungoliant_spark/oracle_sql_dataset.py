@@ -293,7 +293,7 @@ def _vec_lit(v: list[float]) -> str:
 
 def _bucket_expr(planes: list[list[float]]) -> str:
     """Sign-random-projection bucket id over `e` (DOUBLE[]) — the SQL
-    twin of similarity.lsh_bucket (same plane literals, same > 0)."""
+    twin of similarity._bucket_of (same plane literals, same > 0)."""
     return " + ".join(
         f"(CASE WHEN list_dot_product(e, {_vec_lit(p)}) > 0"
         f" THEN {1 << i} ELSE 0 END)"
