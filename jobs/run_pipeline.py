@@ -185,6 +185,23 @@ def read_fingerprint_table(spark, path: str):
     return df.filter(F.col("afp").isNotNull()).select("clip_id", "afp")
 
 
+def job_session():
+    """The job's session. Under spark-submit the JVM already exists
+    (PYSPARK_GATEWAY_PORT is set) and master, memory, shuffle partitions
+    and AQE come from the submit flags: only the profile's batch bounds
+    are applied. Run directly from a source checkout and the default 1g
+    driver heap OOMs the vectorized parquet reader on multi-MB audio
+    rows — use the host-sized session factory instead."""
+    from ungoliant_spark.session import apply_profile, get_spark
+
+    if os.environ.get("PYSPARK_GATEWAY_PORT"):
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.builder.appName("ungoliant-pipeline").getOrCreate()
+        return apply_profile(spark)
+    return get_spark("ungoliant-pipeline")
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="parquet path or iceberg table")
@@ -267,27 +284,7 @@ def main(argv: list[str] | None = None) -> int:
                         "(dup_of_ref, hamming, is_dup)")
     args = p.parse_args(argv)
 
-    # Under spark-submit the JVM already exists (PYSPARK_GATEWAY_PORT
-    # is set) and master/memory come from submit flags. Run directly
-    # from a source checkout and the default 1g driver heap OOMs the
-    # vectorized parquet reader on multi-MB audio rows — use the
-    # scale-aware session factory instead.
-    if os.environ.get("PYSPARK_GATEWAY_PORT"):
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.builder.appName("ungoliant-pipeline").getOrCreate()
-    else:
-        from ungoliant_spark.session import get_spark
-
-        spark = get_spark("ungoliant-pipeline")
-    # runtime-settable SQL confs for binary-heavy tables are set here
-    # so the job is safe regardless of submit flags
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "1024")
-    # the pipeline's only Python node receives the joined transcript
-    # string (never audio bytes), so large Arrow batches are safe and
-    # ~25% faster (see bench.py A/B)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark = job_session()
 
     from ungoliant_spark.plans.checkpoint import manifest_files
 

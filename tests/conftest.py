@@ -7,6 +7,6 @@ from ungoliant_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("ungoliant-tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark("ungoliant-tests", master="local[4]")
     yield s
     s.stop()

@@ -16,7 +16,8 @@ batch:
 
 At cluster scale these stages are embarrassingly parallel and
 shuffle-free; the only sizing concern is Arrow batch memory, bounded
-by spark.sql.execution.arrow.maxRecordsPerBatch (session.py).
+by spark.sql.execution.arrow.maxBytesPerBatch (session.py), which
+shrinks batches of wide audio rows below the row cap.
 """
 
 from __future__ import annotations

@@ -37,7 +37,6 @@ shape is unchanged.
 from __future__ import annotations
 
 import logging
-import os
 import random
 import threading
 from contextlib import contextmanager
@@ -866,13 +865,9 @@ def simhash63_table(
 # memory, same discipline as curation.MAX_OFFSET_ROWS. String ids
 # (clip_id) cost more: the union-find dict holds one Python str per
 # node, so the footprint grows with id length, and that cost has not
-# been measured. Above the cap the
-# distributed loop runs unchanged (crawl-scale correctness path).
-# The env var sets the default once, at import; each call reads the
-# module attribute, so tests force either path by monkeypatching it.
-DRIVER_CC_MAX_EDGES = int(
-    os.environ.get("UNGOLIANT_DRIVER_CC_MAX_EDGES", "1000000")
-)
+# been measured. Above the cap the distributed loop runs unchanged
+# (crawl-scale correctness path).
+DRIVER_CC_MAX_EDGES = 1_000_000
 
 
 def _driver_components(edge_iter) -> dict:

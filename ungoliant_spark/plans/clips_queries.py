@@ -31,33 +31,10 @@ TERM_MAP = {t: ADULT_CATEGORY for t in ADULT_TERMS}
 
 
 def load_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.01
     d = generate(sf, with_labels=False)
-    # defensive runtime confs: the caller's session may have defaults
-    # sized for text tables; clips rows carry multi-KB..MB binary audio
-    # (4096-row reader batches / 10k-row Arrow batches OOM on them)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "512")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-    # scan-split sizing (guide §6 / the same rule bench.py applies to
-    # the pipeline leg): with the default 128 MB splits a 1.6 GB clips
-    # file yields ~13 scan tasks, capping every decode pass at 13-way
-    # parallelism on a 32-core box. Aim for ~3 waves per core, floor
-    # 16 MB so huge-row small-SF fixtures keep bounded splits; on a
-    # real-cluster input (TBs) the computed split converges to the
-    # ceiling, so this is a no-op there.
-    path = f"{d}/clips.parquet"
-    try:
-        clip_bytes = os.path.getsize(path)
-    except OSError:
-        clip_bytes = 0
-    if clip_bytes:
-        cores = spark.sparkContext.defaultParallelism
-        split = min(128 << 20, max(16 << 20, clip_bytes // (3 * cores)))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-    return spark.read.parquet(path)
+    return spark.read.parquet(f"{d}/clips.parquet")
 
 
 def q_clips_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:

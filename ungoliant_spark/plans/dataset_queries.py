@@ -11,6 +11,7 @@ from ungoliant_spark.functions import textstats as ts
 from ungoliant_spark.operators import curation as cur
 from ungoliant_spark.operators import dedup as dd
 from ungoliant_spark.operators import similarity as sim
+from ungoliant_spark.session import scoped_shuffle_partitions
 
 N_QUERY_VECS = 20
 TOPK = 5
@@ -365,11 +366,7 @@ def q_events_sessions_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # one micro-batch for all files: per-user rows are sorted by ts
     # inside the stateful group, so arrival order cannot reorder state
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
-    )
-    try:
+    with scoped_shuffle_partitions(spark, REPLAY_STATE_PARTITIONS):
         sess = sessionize_events(
             spark, src_dir, max_files_per_trigger=1 << 20
         )
@@ -382,8 +379,6 @@ def q_events_sessions_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     out = spark.read.parquet(sink_dir)
     # the sentinel itself opens a per-user singleton session ≥2 days
     # after the data; anything starting after max_ts is sentinel-born
@@ -475,11 +470,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.utime(dst, (base_mtime + 10 * r, base_mtime + 10 * r))
     waved.unpersist()
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
-    )
-    try:
+    with scoped_shuffle_partitions(spark, REPLAY_STATE_PARTITIONS):
         q = stream_exact_dedup(
             spark,
             src_dir,
@@ -491,8 +482,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             available_now=True,
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(sink_dir).select(
         "doc_id",
         "source",
