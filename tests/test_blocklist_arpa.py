@@ -162,3 +162,70 @@ def test_ut1_dir_parsing(tmp_path, spark):
     assert rows[1] == ["gambling"]
     assert rows[2] is None
     assert rows[3] == ["adult"]
+
+
+def _categories_per_term(content, term_to_category):
+    """The form categories_from_terms replaced, kept as its reference:
+    the map and the term array built from one literal per term."""
+    from pyspark.sql import functions as F
+
+    from ungoliant_spark.operators.blocklist import tokens_of
+
+    terms = sorted(term_to_category)
+    term_arr = F.array(*[F.lit(t) for t in terms])
+    cat_map = F.map_from_arrays(
+        F.array(*[F.lit(t) for t in terms]),
+        F.array(*[F.lit(term_to_category[t]) for t in terms]),
+    )
+    hits = F.array_intersect(tokens_of(content), term_arr)
+    cats = F.array_sort(
+        F.array_distinct(F.transform(hits, lambda t: cat_map[t]))
+    )
+    return F.when(F.size(cats) > 0, cats)
+
+
+def _both_forms(df, term_to_category):
+    from pyspark.sql import functions as F
+
+    from ungoliant_spark.operators.blocklist import categories_from_terms
+
+    return df.select(
+        "clip_id",
+        categories_from_terms(F.col("content"), term_to_category).alias("new"),
+        _categories_per_term(F.col("content"), term_to_category).alias("old"),
+    ).collect()
+
+
+def test_constant_map_matches_per_term_form_on_fixture(spark):
+    from ungoliant_spark.sources.fixtures import (
+        ADULT_CATEGORY,
+        ADULT_TERMS,
+        generate,
+    )
+
+    terms = {t: ADULT_CATEGORY for t in ADULT_TERMS}
+    clips = spark.read.parquet(f"{generate(0.001)}/clips.parquet")
+    rows = _both_forms(
+        clips.select("clip_id", clips.transcript.alias("content")), terms
+    )
+    assert all(r.new == r.old for r in rows)
+    assert sum(r.new is not None for r in rows) > 0
+
+
+def test_constant_map_matches_per_term_form_at_10k_terms(spark):
+    terms = {f"term{i:05d}": f"cat{i % 7}" for i in range(10_000)}
+    planted = {
+        1: ("term00000 and Term09999, again term00007", ["cat0", "cat3"]),
+        2: ("nothing listed here, term10000 is not a term", None),
+        3: ("x term04246-term00001 y", ["cat1", "cat4"]),
+        4: ("", None),
+    }
+    df = spark.createDataFrame(
+        [(k, text) for k, (text, _) in planted.items()],
+        "clip_id long, content string",
+    )
+    rows = _both_forms(df, terms)
+    assert {r.clip_id: r.new for r in rows} == {
+        k: want for k, (_, want) in planted.items()
+    }
+    assert all(r.new == r.old for r in rows)

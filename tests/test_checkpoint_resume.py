@@ -128,6 +128,50 @@ def test_snapshot_checksums(spark, clips):
     assert run.kept.verify_checksums() == []
 
 
+def test_lineage_matches_row_number_reference(spark, clips):
+    """lineage_of numbers each output partition's rows in record_id
+    order without a shuffle; the window form it replaced is the
+    reference, on a kept frame of several partitions."""
+    from pyspark.sql import Window
+
+    from ungoliant_spark.plans.checkpoint import lineage_of
+    from ungoliant_spark.plans.pipeline import run as pipeline_run
+
+    # rows within a partition in reverse record order: a shuffle
+    # promises no order, and the fixture's ids arrive sorted
+    kept = (
+        pipeline_run(clips, n_partitions=6)
+        .sortWithinPartitions(F.desc("clip_id"))
+        .cache()
+    )
+    try:
+        assert kept.rdd.getNumPartitions() >= 4
+        got = lineage_of(kept, "chunk-x")
+        w = Window.partitionBy("shard_id").orderBy("record_id")
+        ref = kept.select(
+            F.lit("chunk-x").alias("chunk_id"),
+            F.spark_partition_id().cast("long").alias("shard_id"),
+            F.col("clip_id").alias("record_id"),
+            "line_start",
+            "line_end",
+            "lang_bucket",
+        ).withColumn("loc_in_shard", F.row_number().over(w).cast("long") - 1)
+        assert got.schema == ref.schema
+        assert got.count() == kept.count() > 0
+        assert got.select("shard_id").distinct().count() >= 4
+        assert got.exceptAll(ref).count() == 0
+        assert ref.exceptAll(got).count() == 0
+
+        def shuffles_above_cache(df):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            return "Exchange" in plan.split("InMemoryRelation")[0]
+
+        assert not shuffles_above_cache(got)
+        assert shuffles_above_cache(ref)
+    finally:
+        kept.unpersist()
+
+
 def test_metrics_table(spark, clips):
     run = CheckpointedRun(OUT)
     m = run.metrics.read(spark)

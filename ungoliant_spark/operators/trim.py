@@ -19,6 +19,8 @@ location.rs:115-132) for the lineage table.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -46,6 +48,31 @@ def trimmed_lines(lines: Column, line_start: Column, line_end: Column) -> Column
     ).otherwise(F.array().cast("array<string>"))
 
 
+def trim_stage(
+    text_col: str = "transcript",
+    min_len: int = LENGTH_MIN_CODEPOINTS,
+) -> Callable[[DataFrame], DataFrame]:
+    """:func:`apply_trim` with its Columns built once: the returned
+    function only adds them to a DataFrame, so a plan applied to many
+    inputs builds the expressions one time."""
+    raw = rust_lines(F.col(text_col))
+    start, end = trim_bounds(F.col("_raw_lines"), min_len)
+    lines = trimmed_lines(
+        F.col("_raw_lines"), F.col("line_start"), F.col("line_end")
+    )
+    keep = F.col("line_start").isNotNull()
+
+    def stage(df: DataFrame) -> DataFrame:
+        return (
+            df.withColumn("_raw_lines", raw)
+            .withColumns({"line_start": start, "line_end": end})
+            .withColumns({"lines": lines, "trim_keep": keep})
+            .drop("_raw_lines")
+        )
+
+    return stage
+
+
 def apply_trim(
     df: DataFrame,
     text_col: str = "transcript",
@@ -57,14 +84,4 @@ def apply_trim(
     such records (pipeline.rs:171-185 drops docs whose trimmed content is
     empty). Downstream stages must operate on the trimmed ``lines``.
     """
-    raw = rust_lines(F.col(text_col))
-    df = df.withColumn("_raw_lines", raw)
-    start, end = trim_bounds(F.col("_raw_lines"), min_len)
-    df = df.withColumn("line_start", start).withColumn("line_end", end)
-    df = df.withColumn(
-        "lines",
-        trimmed_lines(F.col("_raw_lines"), F.col("line_start"), F.col("line_end")),
-    )
-    return df.withColumn("trim_keep", F.col("line_start").isNotNull()).drop(
-        "_raw_lines"
-    )
+    return trim_stage(text_col, min_len)(df)

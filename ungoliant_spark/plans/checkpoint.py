@@ -32,7 +32,7 @@ import json
 import os
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ungoliant_spark.plans.pipeline import run as pipeline_run
@@ -254,7 +254,13 @@ def check_or_pin_run_config(
 
 
 def lineage_of(kept: DataFrame, chunk_id: str) -> DataFrame:
-    w = Window.partitionBy("shard_id").orderBy("record_id")
+    """One lineage row per kept doc, ``loc_in_shard`` numbering the
+    rows of each output partition (``shard_id``) in ``record_id``
+    order — shuffle-free: after a sort within the partition,
+    ``monotonically_increasing_id`` is (partition id << 33) + the
+    row's position, so subtracting the shard's base leaves the
+    position, the same number a row_number() window over shard_id
+    gives without that window's exchange."""
     return (
         kept.select(
             F.lit(chunk_id).alias("chunk_id"),
@@ -264,8 +270,12 @@ def lineage_of(kept: DataFrame, chunk_id: str) -> DataFrame:
             "line_end",
             "lang_bucket",
         )
-        .withColumn("loc_in_shard", F.row_number().over(w).cast("long") - 1)
-        .sortWithinPartitions("loc_in_shard")
+        .sortWithinPartitions("record_id")
+        .withColumn(
+            "loc_in_shard",
+            F.monotonically_increasing_id()
+            - F.shiftleft(F.col("shard_id"), 33),
+        )
     )
 
 

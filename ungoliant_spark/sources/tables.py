@@ -34,8 +34,13 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+
+# threads hashing a commit's new files: at most the cores this
+# process may run on
+_HASH_THREADS = min(8, len(os.sched_getaffinity(0)))
 
 
 def _sha256(path: str) -> str:
@@ -102,14 +107,16 @@ class SnapshotTable:
         # per-file sha256 + size recorded in the manifest — the analog
         # of the reference's packaging checksums (src/processing/
         # package.rs:23-62 writes sha256sum-compatible files per lang);
-        # here integrity travels with the snapshot itself
+        # here integrity travels with the snapshot itself. The files
+        # are hashed on threads: hashlib releases the GIL on large
+        # buffers, so the hashes overlap instead of queueing.
         new_files = [os.path.relpath(p, self.root) for p in new_files]
+        paths = [os.path.join(self.root, rel) for rel in new_files]
+        with ThreadPoolExecutor(max_workers=_HASH_THREADS) as pool:
+            digests = list(pool.map(_sha256, paths))
         checksums = {
-            rel: {
-                "sha256": _sha256(os.path.join(self.root, rel)),
-                "bytes": os.path.getsize(os.path.join(self.root, rel)),
-            }
-            for rel in new_files
+            rel: {"sha256": digest, "bytes": os.path.getsize(path)}
+            for rel, path, digest in zip(new_files, paths, digests)
         }
         prev_files = snap["files"] if snap else []
         prev_chunks = snap["summary"]["chunks"] if snap else []
