@@ -7,15 +7,19 @@
         [--format snapshot|iceberg] [--jsonl-out DIR] \
         [--dedup exact|simhash]
 
-Formats:
+Formats (one chunk loop, plans.checkpoint.CheckpointedRun, for both):
 * snapshot (default, works everywhere): the parquet snapshot-manifest
   tables in ungoliant_spark.sources.tables — atomic chunk commits,
   resume by rerunning the same command.
-* iceberg (requires an Iceberg catalog on the cluster; not testable
-  in this sandbox): identical chunk loop, but each chunk lands as one
-  `writeTo(...).append()` whose snapshot summary property
-  'ungoliant.chunk' records the chunk id; resume lists committed ids
-  from the snapshot log. The decision DAG is byte-identical in both.
+* iceberg (requires an Iceberg runtime and catalog on the cluster;
+  the tests stub its catalog calls): the same loop over
+  sources.tables.CatalogTable — each chunk lands as one Iceberg
+  append whose snapshot summary property 'ungoliant.chunk' records
+  the chunk id; resume lists committed ids from the snapshot log.
+
+`main` parses, opens the job session and calls `run_job(spark, args)`,
+which never touches the session's confs or stops it — so tests and
+notebooks call `run_job` in-process on a session of their own.
 """
 
 from __future__ import annotations
@@ -39,57 +43,12 @@ def parse_blocklist(path: str | None) -> dict[str, str] | None:
     layout the reference consumes (content_detector.rs:26-64)."""
     if not path:
         return None
-    import os
-
     if os.path.isdir(path):
         from ungoliant_spark.operators.blocklist import load_ut1_dir
 
         return load_ut1_dir(path)
     with open(path, newline="", encoding="utf-8") as f:
         return {row[0]: row[1] for row in csv.reader(f) if len(row) >= 2}
-
-
-def _aux_path(output: str, name: str) -> str:
-    """Where a per-run auxiliary file lands for the Iceberg branch. A
-    path-like output gets the file beside it (matching the snapshot
-    branch, which writes under out_root); a catalog identifier like
-    `cat.db.run` has no directory, so the file is named after the
-    identifier in the CWD — unique per output, so concurrent jobs
-    with different outputs never clobber each other."""
-    if "/" in output:
-        os.makedirs(output, exist_ok=True)
-        return os.path.join(output, name)
-    return f"{output}.{name}"
-
-
-def schema_json_path(output: str) -> str:
-    return _aux_path(output, "metadata_schema.json")
-
-
-def chunks_json_path(output: str) -> str:
-    return _aux_path(output, "chunks.json")
-
-
-def check_chunk_pin(output: str, committed_any: bool) -> str:
-    """ADVICE r4 resume guard: for catalog-identifier outputs the
-    chunk-plan pin lives in the launching CWD (no durable directory
-    exists), so resuming from a DIFFERENT working directory would
-    silently re-pin a fresh plan — if the input listing changed in
-    between, committed chunk ids would map to different row subsets
-    (duplicated or dropped rows). Committed chunks with no pin file
-    present is exactly that failure — refuse loudly, BEFORE pinning.
-    Returns the pin path for the subsequent load_or_pin call."""
-    pin_path = chunks_json_path(output)
-    if not os.path.exists(pin_path) and committed_any:
-        raise RuntimeError(
-            f"output '{output}' already has committed chunks but no "
-            f"pinned chunk plan exists at {pin_path}. For catalog "
-            "identifiers the pin is CWD-relative: resume from the "
-            "original working directory (or copy its chunks.json "
-            "here). Refusing to re-pin a fresh plan over committed "
-            "chunks — chunk ids could map to different row subsets."
-        )
-    return pin_path
 
 
 def kept_fingerprints_or_none(kept_df):
@@ -185,24 +144,7 @@ def read_fingerprint_table(spark, path: str):
     return df.filter(F.col("afp").isNotNull()).select("clip_id", "afp")
 
 
-def job_session():
-    """The job's session. Under spark-submit the JVM already exists
-    (PYSPARK_GATEWAY_PORT is set) and master, memory, shuffle partitions
-    and AQE come from the submit flags: only the profile's batch bounds
-    are applied. Run directly from a source checkout and the default 1g
-    driver heap OOMs the vectorized parquet reader on multi-MB audio
-    rows — use the host-sized session factory instead."""
-    from ungoliant_spark.session import apply_profile, get_spark
-
-    if os.environ.get("PYSPARK_GATEWAY_PORT"):
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.builder.appName("ungoliant-pipeline").getOrCreate()
-        return apply_profile(spark)
-    return get_spark("ungoliant-pipeline")
-
-
-def main(argv: list[str] | None = None) -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="parquet path or iceberg table")
     p.add_argument("--output", required=True, help="output root / table prefix")
@@ -282,11 +224,17 @@ def main(argv: list[str] | None = None) -> int:
                         "audio_stats snapshot) — the reference corpus "
                         "is never re-decoded; writes clip_id -> "
                         "(dup_of_ref, hamming, is_dup)")
-    args = p.parse_args(argv)
+    return p.parse_args(argv)
 
-    spark = job_session()
 
-    from ungoliant_spark.plans.checkpoint import manifest_files
+def run_job(spark, args: argparse.Namespace) -> None:
+    """The job body on ``spark``: the chunked run into the snapshot or
+    catalog sink, then the follow-on passes over its committed kept
+    table."""
+    from ungoliant_spark.plans.checkpoint import (
+        CheckpointedRun,
+        manifest_files,
+    )
 
     # SnapshotTable-root inputs are read from their manifest: the
     # committed file list plans file-range chunks metadata-only (the
@@ -300,151 +248,22 @@ def main(argv: list[str] | None = None) -> int:
         clips = spark.read.parquet(args.input)
     else:
         clips = spark.read.table(args.input)
-    terms = parse_blocklist(args.blocklist)
 
-    if args.format == "snapshot":
-        from ungoliant_spark.plans.checkpoint import CheckpointedRun
-
-        run = CheckpointedRun(args.output)
-        committed = run.run(
-            clips,
-            args.chunks,
-            terms,
-            n_partitions=args.partitions,
-            files=in_manifest,
-            audio_gate=args.audio_gate,
-            rate_gate=args.rate_gate,
-        )
-        print(f"committed {len(committed)} new chunks -> {args.output}")
-    else:
-        from ungoliant_spark.plans.checkpoint import (
-            lineage_of,
-            load_or_pin_chunk_plan,
-            metrics_of,
-        )
-        from ungoliant_spark.plans.pipeline import run as pipeline_run
-
-        tables = {
-            "kept": f"{args.output}_kept",
-            "lineage": f"{args.output}_lineage",
-            "metrics": f"{args.output}_metrics",
-        }
-
-        def exists(tbl: str) -> bool:
-            # tableExists answers "not found" definitively; a catalog/
-            # network failure raises instead of masquerading as absence
-            return spark.catalog.tableExists(tbl)
-
-        def committed(tbl: str) -> set[str]:
-            # Only a genuinely missing table yields the empty set. A
-            # transient catalog error on resume must FAIL the job: an
-            # empty committed set here would re-append every chunk of
-            # that table — silent row duplication (ADVICE r3).
-            if not exists(tbl):
-                return set()
-            rows = spark.sql(
-                f"SELECT summary FROM {tbl}.snapshots"
-            ).collect()
-            return {
-                cid
-                for row in rows
-                if (cid := dict(row["summary"]).get("ungoliant.chunk"))
-            }
-
-        # per-table committed sets: resume keys on the INTERSECTION
-        # (a chunk is done only when all three tables have it), but
-        # each append must skip per-table — after a crash between the
-        # lineage/metrics/kept appends, the re-run of the torn chunk
-        # would otherwise append lineage (and possibly metrics) a
-        # second time, silently duplicating rows (ADVICE r2). Sets are
-        # read once and maintained in-process; this job is the
-        # single writer (same contract as SnapshotTable.append).
-        done_per_table = {tbl: committed(tbl) for tbl in tables.values()}
-
-        pin_path = check_chunk_pin(
-            args.output, any(done_per_table.values())
-        )
-        from ungoliant_spark.plans.checkpoint import (
-            blocklist_hash,
-            check_or_pin_run_config,
-        )
-
-        check_or_pin_run_config(
-            _aux_path(args.output, "run_config.json"),
-            {
-                "audio_gate": args.audio_gate,
-                "rate_gate": args.rate_gate,
-                "terms_hash": blocklist_hash(terms),
-            },
-            committed_any=any(done_per_table.values()),
-        )
-
-        # file-range chunks when the input is a plain parquet scan or
-        # a SnapshotTable manifest (chunk k reads only its file subset
-        # — one scan of the input total); hash-chunk fallback
-        # otherwise. The plan is PINNED to chunks.json and validated
-        # on resume, exactly like the snapshot branch: if input files
-        # were added/removed between the original run and a resume (or
-        # the strategy would silently flip), committed chunk ids would
-        # map to different row subsets, duplicating or dropping rows.
-        chunk_df, chunk_strategy = load_or_pin_chunk_plan(
-            clips, args.chunks, pin_path, files=in_manifest,
-        )
-        print(f"chunk strategy: {chunk_strategy}")
-
-        def append(df, tbl: str, chunk_id: str) -> None:
-            if chunk_id in done_per_table[tbl]:
-                return  # idempotent-by-skip, mirroring SnapshotTable
-            # Iceberg append() fails on a nonexistent table — the
-            # first chunk creates each table (createOrReplace would
-            # wipe a resumed run's data)
-            w = df.writeTo(tbl).option(
-                "snapshot-property.ungoliant.chunk", chunk_id
-            )
-            w.append() if exists(tbl) else w.create()
-            done_per_table[tbl].add(chunk_id)
-
-        done = (
-            done_per_table[tables["kept"]]
-            & done_per_table[tables["lineage"]]
-            & done_per_table[tables["metrics"]]
-        )
-        schema_written = False
-        for chunk in range(args.chunks):
-            chunk_id = f"chunk-{chunk:05d}"
-            if chunk_id in done:
-                continue
-            part = chunk_df(chunk)
-            kept = pipeline_run(
-                part, terms, args.partitions,
-                audio_gate=args.audio_gate, rate_gate=args.rate_gate,
-            ).cache()
-            try:
-                out = kept.drop("sentence_langs")
-                if not schema_written:
-                    # the reference writes metadata_schema.json beside
-                    # the output post-run (src/main.rs:64-69); derive
-                    # the path from --output so a spark-submit from
-                    # another directory doesn't scatter it and two
-                    # concurrent jobs can't overwrite each other's
-                    # (catalog-identifier outputs get a per-run name)
-                    with open(schema_json_path(args.output), "w") as f:
-                        f.write(out.schema.json())
-                    schema_written = True
-                # kept last: resume intersects all three, and a torn
-                # chunk never shows kept rows without their lineage
-                append(lineage_of(kept, chunk_id), tables["lineage"], chunk_id)
-                append(metrics_of(kept, chunk_id), tables["metrics"], chunk_id)
-                append(out, tables["kept"], chunk_id)
-            finally:
-                kept.unpersist()
-            print(f"committed {chunk_id}")
-    def read_kept():
-        if args.format == "snapshot":
-            from ungoliant_spark.plans.checkpoint import CheckpointedRun
-
-            return CheckpointedRun(args.output).kept.read(spark)
-        return spark.read.table(f"{args.output}_kept")
+    run = (
+        CheckpointedRun(args.output)
+        if args.format == "snapshot"
+        else CheckpointedRun.on_catalog(spark, args.output)
+    )
+    committed = run.run(
+        clips,
+        args.chunks,
+        parse_blocklist(args.blocklist),
+        n_partitions=args.partitions,
+        files=in_manifest,
+        audio_gate=args.audio_gate,
+        rate_gate=args.rate_gate,
+    )
+    print(f"committed {len(committed)} new chunks -> {args.output}")
 
     def write_aux(df, name: str) -> str:
         """Land a follow-on pass result (pure function of the kept
@@ -464,7 +283,7 @@ def main(argv: list[str] | None = None) -> int:
         # by language in ONE parallel write
         from ungoliant_spark.sources.jsonl import write_jsonl_by_lang
 
-        write_jsonl_by_lang(read_kept(), args.jsonl_out)
+        write_jsonl_by_lang(run.kept.read(spark), args.jsonl_out)
         print(f"packaged jsonl -> {args.jsonl_out}")
     if args.dedup:
         # Dedup is CROSS-CHUNK by nature (a dup cluster spans chunks),
@@ -487,7 +306,7 @@ def main(argv: list[str] | None = None) -> int:
             simhash_components,
         )
 
-        kept_df = read_kept()
+        kept_df = run.kept.read(spark)
         with group_cache_scope():
             if args.dedup == "exact":
                 ded = exact_dedup_reps(
@@ -501,12 +320,7 @@ def main(argv: list[str] | None = None) -> int:
                 ded = simhash_components(
                     kept_df, id_col="clip_id", text_col="transcript"
                 )
-            if args.format == "snapshot":
-                dedup_out = os.path.join(args.output, "dedup")
-                ded.write.mode("overwrite").parquet(dedup_out)
-            else:
-                dedup_out = f"{args.output}_dedup"
-                ded.writeTo(dedup_out).createOrReplace()
+            dedup_out = write_aux(ded, "dedup")
         print(f"dedup ({args.dedup}) mapping -> {dedup_out}")
     # `is not None`, not truthiness: an explicit --strip-boilerplate
     # 0.0 must reach remove_frequent_lines and fail its range check
@@ -525,7 +339,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         from ungoliant_spark.operators.dedup import group_cache_scope
 
-        lined = read_kept().select(
+        lined = run.kept.read(spark).select(
             "clip_id", F.split(F.col("transcript"), "\n").alias("lines")
         )
         with group_cache_scope():
@@ -536,12 +350,7 @@ def main(argv: list[str] | None = None) -> int:
                 F.array_join("lines", "\n").alias("transcript_clean"),
                 "n_boilerplate_lines",
             )
-            if args.format == "snapshot":
-                bp_out = os.path.join(args.output, "boilerplate")
-                cleaned.write.mode("overwrite").parquet(bp_out)
-            else:
-                bp_out = f"{args.output}_boilerplate"
-                cleaned.writeTo(bp_out).createOrReplace()
+            bp_out = write_aux(cleaned, "boilerplate")
         print(f"boilerplate-stripped transcripts -> {bp_out}")
     if args.decontam:
         # same follow-on shape as --dedup (cross-chunk by nature: the
@@ -560,7 +369,7 @@ def main(argv: list[str] | None = None) -> int:
                 "value", "text"
             )
         flags = flag_contaminated(
-            read_kept(),
+            run.kept.read(spark),
             bench,
             n=args.decontam_ngram,
             id_col="clip_id",
@@ -578,7 +387,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         sig = repetition_signals(
-            read_kept(), id_col="clip_id", text_col="transcript"
+            run.kept.read(spark), id_col="clip_id", text_col="transcript"
         )
         rp_out = write_aux(sig, "repetition")
         print(f"repetition signals -> {rp_out}")
@@ -587,10 +396,10 @@ def main(argv: list[str] | None = None) -> int:
         # the audio bytes, so this pass is metadata-cheap
         from ungoliant_spark.operators.audio_ops import speech_rate
 
-        sr_out = write_aux(speech_rate(read_kept()), "speech_rate")
+        sr_out = write_aux(speech_rate(run.kept.read(spark)), "speech_rate")
         print(f"speech-rate signals -> {sr_out}")
     if args.vad:
-        vad_out = write_aux(build_vad(read_kept()), "vad")
+        vad_out = write_aux(build_vad(run.kept.read(spark)), "vad")
         print(f"vad signals -> {vad_out}")
     if args.audio_dedup:
         # acoustic-side twin of --dedup: cross-chunk by nature, pure
@@ -602,7 +411,7 @@ def main(argv: list[str] | None = None) -> int:
         from ungoliant_spark.operators.dedup import group_cache_scope
 
         with group_cache_scope():
-            comp = build_audio_dedup(read_kept())
+            comp = build_audio_dedup(run.kept.read(spark))
             ad_out = write_aux(comp, "audio_dedup")
         print(f"audio dedup mapping -> {ad_out}")
     if args.ref_fingerprints:
@@ -616,9 +425,17 @@ def main(argv: list[str] | None = None) -> int:
 
         ref_fp = read_fingerprint_table(spark, args.ref_fingerprints)
         with group_cache_scope():
-            res = build_audio_dedup_against(read_kept(), ref_fp)
+            res = build_audio_dedup_against(run.kept.read(spark), ref_fp)
             ada_out = write_aux(res, "audio_dedup_against")
         print(f"audio cross-corpus dedup -> {ada_out}")
+
+
+def main(argv: list[str] | None = None) -> int:
+    from ungoliant_spark.session import job_session
+
+    args = parse_args(argv)
+    spark = job_session("ungoliant-pipeline")
+    run_job(spark, args)
     spark.stop()
     return 0
 

@@ -84,7 +84,7 @@ def _write_progress(q, out_dir: str, mode: str) -> None:
     )
 
 
-def main(argv: list[str] | None = None) -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p = argparse.ArgumentParser()
     p.add_argument("--mode", required=True,
                    choices=["quality", "dedup", "audio-dedup"])
@@ -101,17 +101,19 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--available-now", action="store_true")
     p.add_argument("--timeout-sec", type=float, default=None,
                    help="stop the query after N seconds (smoke runs)")
-    args = p.parse_args(argv)
+    return p.parse_args(argv)
 
+
+def run_job(spark, args: argparse.Namespace) -> None:
+    """The stream on ``spark`` until it drains, times out or ends; the
+    session's confs and lifetime stay the caller's."""
     from jobs.run_pipeline import parse_blocklist
-    from ungoliant_spark.session import get_spark
     from ungoliant_spark.streaming.quality_stream import (
         stream_audio_dedup,
         stream_exact_dedup,
         stream_quality_filter,
     )
 
-    spark = get_spark("ungoliant-stream")
     try:
         if args.mode == "quality":
             q = stream_quality_filter(
@@ -157,7 +159,6 @@ def main(argv: list[str] | None = None) -> int:
         else:
             q.awaitTermination()
         print(f"stream {args.mode}: committed -> {args.output}")
-        return 0
     finally:
         # progress lands even when a continuous run is interrupted or
         # fails — the long-running case the docstring promises it for
@@ -166,7 +167,18 @@ def main(argv: list[str] | None = None) -> int:
             _write_progress(q, args.output, args.mode)
         except Exception:
             pass
+
+
+def main(argv: list[str] | None = None) -> int:
+    from ungoliant_spark.session import job_session
+
+    args = parse_args(argv)
+    spark = job_session("ungoliant-stream")
+    try:
+        run_job(spark, args)
+    finally:
         spark.stop()
+    return 0
 
 
 if __name__ == "__main__":

@@ -1,25 +1,33 @@
-"""End-to-end smoke of the spark-submit entrypoint
-(jobs/run_pipeline.py, snapshot format): run the CLI twice on the
-sf0.001 fixture with a UT1-style blocklist directory — first run
-commits everything and writes metadata_schema.json, second run is a
-no-op resume."""
+"""The job entrypoints (jobs/run_pipeline.py, jobs/run_stream.py).
+Most tests call a job's ``run_job`` in-process on the shared session;
+one test per entrypoint runs it as a CLI in a new process:
+run_pipeline twice on the sf0.001 fixture with a UT1-style blocklist
+directory — first run commits everything and writes
+metadata_schema.json, second run is a no-op resume."""
 
 from __future__ import annotations
 
+import io
 import json
 import os
 import shutil
 import subprocess
 import sys
+from contextlib import redirect_stdout
+
+import pytest
+
+from jobs import run_pipeline, run_stream
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(REPO, ".cache", "test_cli_out")
 
 
-def _run_cli(args: list[str]) -> str:
+def _run_process(job: str, args: list[str]) -> str:
+    """``jobs/{job}.py`` as a CLI, in a new process; its stdout."""
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     res = subprocess.run(
-        [sys.executable, "jobs/run_pipeline.py", *args],
+        [sys.executable, f"jobs/{job}.py", *args],
         cwd=REPO,
         env=env,
         capture_output=True,
@@ -28,6 +36,18 @@ def _run_cli(args: list[str]) -> str:
     )
     assert res.returncode == 0, res.stderr[-2000:]
     return res.stdout
+
+
+def _run_in_process(job, spark, args: list[str]) -> str:
+    """``job``'s body on ``spark`` for the CLI ``args``; its stdout."""
+    out = io.StringIO()
+    with redirect_stdout(out):
+        job.run_job(spark, job.parse_args(args))
+    return out.getvalue()
+
+
+def _run_cli(spark, args: list[str]) -> str:
+    return _run_in_process(run_pipeline, spark, args)
 
 
 def test_cli_snapshot_run_and_resume(tmp_path):
@@ -39,7 +59,8 @@ def test_cli_snapshot_run_and_resume(tmp_path):
     (bl / "terms").write_text("\n".join(ADULT_TERMS))
     shutil.rmtree(OUT, ignore_errors=True)
 
-    out1 = _run_cli(
+    out1 = _run_process(
+        "run_pipeline",
         ["--input", clips, "--output", OUT, "--chunks", "4",
          "--blocklist", str(tmp_path / "ut1")]
     )
@@ -63,9 +84,11 @@ def test_cli_snapshot_run_and_resume(tmp_path):
     import glob
 
     jl = os.path.join(OUT, "jsonl")
-    out2 = _run_cli(["--input", clips, "--output", OUT, "--chunks", "4",
-                     "--blocklist", str(tmp_path / "ut1"),
-                     "--jsonl-out", jl])
+    out2 = _run_process(
+        "run_pipeline",
+        ["--input", clips, "--output", OUT, "--chunks", "4",
+         "--blocklist", str(tmp_path / "ut1"), "--jsonl-out", jl],
+    )
     assert "committed 0 new chunks" in out2
     assert "packaged jsonl" in out2
     parts = glob.glob(os.path.join(jl, "lang_bucket=*", "*.txt.gz"))
@@ -79,22 +102,19 @@ def test_cli_snapshot_run_and_resume(tmp_path):
 
 
 def test_schema_json_path_derivation(tmp_path):
-    """ADVICE r2: the Iceberg branch wrote metadata_schema.json to the
+    """ADVICE r2: the Iceberg sink wrote metadata_schema.json to the
     process CWD — it must derive from --output so spark-submit from
     another directory doesn't scatter it and concurrent jobs with
     different outputs can't clobber each other."""
-    import importlib
-    import sys
+    from ungoliant_spark.plans import checkpoint as cp
 
-    sys.path.insert(0, os.path.join(REPO, "jobs"))
-    rp = importlib.import_module("run_pipeline")
     # path-like output → beside the output root (snapshot-branch parity)
-    p = rp.schema_json_path(str(tmp_path / "outdir"))
+    p = cp.schema_json_path(str(tmp_path / "outdir"))
     assert p == str(tmp_path / "outdir" / "metadata_schema.json")
     assert os.path.isdir(tmp_path / "outdir")
     # catalog identifier → per-output filename, no directory
-    assert rp.schema_json_path("cat.db.run1") == "cat.db.run1.metadata_schema.json"
-    assert rp.schema_json_path("cat.db.run2") != rp.schema_json_path("cat.db.run1")
+    assert cp.schema_json_path("cat.db.run1") == "cat.db.run1.metadata_schema.json"
+    assert cp.schema_json_path("cat.db.run2") != cp.schema_json_path("cat.db.run1")
 
 
 def test_chunk_pin_cross_check(tmp_path, monkeypatch):
@@ -103,29 +123,42 @@ def test_chunk_pin_cross_check(tmp_path, monkeypatch):
     chunks with no pin file must fail loudly instead of silently
     re-pinning a fresh plan (which could map committed chunk ids to
     different row subsets)."""
-    import importlib
-    import sys
+    from ungoliant_spark.plans import checkpoint as cp
 
-    import pytest
-
-    sys.path.insert(0, os.path.join(REPO, "jobs"))
-    rp = importlib.import_module("run_pipeline")
     monkeypatch.chdir(tmp_path)
     # fresh run (nothing committed): pinning proceeds
-    assert rp.check_chunk_pin("cat.db.run", False).endswith(
+    assert cp.check_chunk_pin("cat.db.run", False).endswith(
         "cat.db.run.chunks.json"
     )
     # committed chunks but no pin here → wrong-CWD resume, refuse
     with pytest.raises(RuntimeError, match="no pinned chunk plan"):
-        rp.check_chunk_pin("cat.db.run", True)
+        cp.check_chunk_pin("cat.db.run", True)
     # pin present (right CWD): resume proceeds
     (tmp_path / "cat.db.run.chunks.json").write_text("{}")
-    assert rp.check_chunk_pin("cat.db.run", True)
-    # path-like outputs keep the pin beside the output (durable) —
-    # the guard is a no-op safety net there
+    assert cp.check_chunk_pin("cat.db.run", True)
+    # path-like outputs keep the pin beside the output (durable); the
+    # refusal there is the next test's
     out = tmp_path / "outdir"
-    p = rp.check_chunk_pin(str(out), False)
+    p = cp.check_chunk_pin(str(out), False)
     assert p == str(out / "chunks.json")
+
+
+def test_snapshot_resume_without_chunk_pin_refuses(spark, tmp_path):
+    """The ADVICE r4 guard holds for snapshot outputs too: committed
+    chunks whose chunks.json is gone refuse to re-pin a fresh plan."""
+    from ungoliant_spark.plans.checkpoint import CheckpointedRun
+    from ungoliant_spark.sources.fixtures import generate
+
+    clips = spark.read.parquet(
+        os.path.join(generate(0.001, with_labels=False), "clips.parquet")
+    )
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        CheckpointedRun(out).run(clips, 2, fail_after=1)
+    os.remove(os.path.join(out, "chunks.json"))
+    with pytest.raises(RuntimeError, match="no pinned chunk plan"):
+        CheckpointedRun(out).run(clips, 2)
+    assert not os.path.exists(os.path.join(out, "chunks.json"))
 
 
 def test_jsonl_by_lang_sink(spark, tmp_path):
@@ -182,8 +215,8 @@ def test_cli_dedup_follow_on_pass(spark, tmp_path):
     clips = os.path.join(generate(0.001, with_labels=False), "clips.parquet")
     out = str(tmp_path / "dedup_out")
 
-    _run_cli(["--input", clips, "--output", out, "--chunks", "2",
-              "--dedup", "exact"])
+    _run_cli(spark, ["--input", clips, "--output", out, "--chunks", "2",
+                     "--dedup", "exact"])
     from ungoliant_spark.plans.checkpoint import CheckpointedRun
 
     kept = CheckpointedRun(out).kept.read(spark)
@@ -215,8 +248,8 @@ def test_cli_dedup_follow_on_pass(spark, tmp_path):
     # exact dups are both Hamming-0 and Jaccard-1 near-dups, so every
     # exact cluster sits inside one component for either family
     for variant in ("simhash", "minhash"):
-        stdout = _run_cli(["--input", clips, "--output", out,
-                           "--chunks", "2", "--dedup", variant])
+        stdout = _run_cli(spark, ["--input", clips, "--output", out,
+                                  "--chunks", "2", "--dedup", variant])
         assert "committed 0 new chunks" in stdout
         assert f"dedup ({variant}) mapping" in stdout
         comp = spark.read.parquet(os.path.join(out, "dedup"))
@@ -229,8 +262,8 @@ def test_cli_dedup_follow_on_pass(spark, tmp_path):
 
     # boilerplate pass on the same committed output: mapping is total
     # and transcripts without over-frequent lines pass through intact
-    stdout = _run_cli(["--input", clips, "--output", out, "--chunks", "2",
-                       "--strip-boilerplate", "0.9"])
+    stdout = _run_cli(spark, ["--input", clips, "--output", out, "--chunks", "2",
+                              "--strip-boilerplate", "0.9"])
     assert "boilerplate-stripped transcripts" in stdout
     bpdf = spark.read.parquet(os.path.join(out, "boilerplate"))
     assert bpdf.count() == n_kept
@@ -255,8 +288,8 @@ def test_cli_dedup_follow_on_pass(spark, tmp_path):
     bench_path = str(tmp_path / "bench.txt")
     with open(bench_path, "w", encoding="utf-8") as f:
         f.write(planted["transcript"] + "\n")
-    stdout = _run_cli(["--input", clips, "--output", out, "--chunks", "2",
-                       "--decontam", bench_path, "--decontam-ngram", "3"])
+    stdout = _run_cli(spark, ["--input", clips, "--output", out, "--chunks", "2",
+                              "--decontam", bench_path, "--decontam-ngram", "3"])
     assert "decontamination flags (n=3)" in stdout
     dc = spark.read.parquet(os.path.join(out, "decontam"))
     assert set(dc.columns) == {
@@ -271,8 +304,8 @@ def test_cli_dedup_follow_on_pass(spark, tmp_path):
 
     # --repetition (round-5 verdict item 6): total annotation with
     # the Gopher signal columns
-    stdout = _run_cli(["--input", clips, "--output", out, "--chunks", "2",
-                       "--repetition"])
+    stdout = _run_cli(spark, ["--input", clips, "--output", out, "--chunks", "2",
+                              "--repetition"])
     assert "repetition signals" in stdout
     rp = spark.read.parquet(os.path.join(out, "repetition"))
     assert rp.count() == n_kept
@@ -284,8 +317,8 @@ def test_cli_dedup_follow_on_pass(spark, tmp_path):
     # a planted (prev, dup) re-upload pair with both sides kept
     from ungoliant_spark.sources.fixtures import is_dup_row
 
-    stdout = _run_cli(["--input", clips, "--output", out, "--chunks", "2",
-                       "--audio-dedup"])
+    stdout = _run_cli(spark, ["--input", clips, "--output", out, "--chunks", "2",
+                              "--audio-dedup"])
     assert "audio dedup mapping" in stdout
     ad = spark.read.parquet(os.path.join(out, "audio_dedup"))
     assert set(ad.columns) == {"clip_id", "component_rep"}
@@ -303,8 +336,8 @@ def test_cli_dedup_follow_on_pass(spark, tmp_path):
         assert is_dup_row(i) and rep == f"clip-{i - 1:08d}", (cid, rep)
 
     # --speech-rate / --vad (round-6): total signal annotations
-    stdout = _run_cli(["--input", clips, "--output", out, "--chunks", "2",
-                       "--speech-rate", "--vad"])
+    stdout = _run_cli(spark, ["--input", clips, "--output", out, "--chunks", "2",
+                              "--speech-rate", "--vad"])
     assert "speech-rate signals" in stdout and "vad signals" in stdout
     srdf = spark.read.parquet(os.path.join(out, "speech_rate"))
     assert srdf.count() == n_kept
@@ -336,7 +369,7 @@ def test_cli_snapshot_table_input_uses_manifest(spark, tmp_path):
 
     out = str(tmp_path / "outtable")
     stdout = _run_cli(
-        ["--input", src_root, "--output", out, "--chunks", "4"]
+        spark, ["--input", src_root, "--output", out, "--chunks", "4"]
     )
     assert "committed 4 new chunks" in stdout
     # the pinned plan is file-range over the MANIFEST file list
@@ -374,8 +407,8 @@ def test_cli_audio_gate(spark, tmp_path):
     fx = generate(0.001)
     clips = os.path.join(fx, "clips.parquet")
     out = str(tmp_path / "gated_out")
-    stdout = _run_cli(["--input", clips, "--output", out, "--chunks", "2",
-                       "--audio-gate"])
+    stdout = _run_cli(spark, ["--input", clips, "--output", out, "--chunks", "2",
+                              "--audio-gate"])
     assert "committed 2 new chunks" in stdout
 
     labels = {
@@ -422,12 +455,9 @@ def test_cli_audio_gate_fingerprint_reuse(spark, tmp_path):
     cross-corpus pass against a committed fingerprint table without
     re-decoding either side. Resuming with a different gate flag
     refuses loudly (run-config pin)."""
-    import subprocess
-
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from jobs.run_pipeline import build_audio_dedup
     from ungoliant_spark.operators.audio_ops import audio_dup_components
     from ungoliant_spark.operators.dedup import group_cache_scope
     from ungoliant_spark.oracle_sql_clips import ensure_audio_expected
@@ -436,8 +466,8 @@ def test_cli_audio_gate_fingerprint_reuse(spark, tmp_path):
 
     clips = os.path.join(generate(0.001, with_labels=False), "clips.parquet")
     out = str(tmp_path / "gated_fp_out")
-    stdout = _run_cli(["--input", clips, "--output", out, "--chunks", "2",
-                       "--audio-gate", "--audio-dedup", "--vad"])
+    stdout = _run_cli(spark, ["--input", clips, "--output", out, "--chunks", "2",
+                              "--audio-gate", "--audio-dedup", "--vad"])
     assert "audio dedup mapping" in stdout and "vad signals" in stdout
 
     kept = CheckpointedRun(out).kept.read(spark)
@@ -461,9 +491,9 @@ def test_cli_audio_gate_fingerprint_reuse(spark, tmp_path):
     # plan gate: the reuse paths have no Python stage at all — the
     # dedup pass folds over persisted fingerprints, the vad pass over
     # persisted frame energies
-    from jobs.run_pipeline import build_vad
-
-    for plan_df in (build_audio_dedup(kept), build_vad(kept)):
+    for plan_df in (
+        run_pipeline.build_audio_dedup(kept), run_pipeline.build_vad(kept)
+    ):
         plan = plan_df._jdf.queryExecution().executedPlan().toString()
         for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
                      "PythonMapInArrow", "FlatMapGroupsInPandas"):
@@ -499,9 +529,9 @@ def test_cli_audio_gate_fingerprint_reuse(spark, tmp_path):
     # --ref-fingerprints: the committed gated kept table IS a valid
     # fingerprint table; self-reference flags every clip (its own
     # fingerprint is in the reference) with a rep no later than itself
-    stdout = _run_cli(["--input", clips, "--output", out, "--chunks", "2",
-                       "--audio-gate",
-                       "--ref-fingerprints", os.path.join(out, "kept")])
+    stdout = _run_cli(spark, ["--input", clips, "--output", out, "--chunks", "2",
+                              "--audio-gate",
+                              "--ref-fingerprints", os.path.join(out, "kept")])
     assert "audio cross-corpus dedup" in stdout
     ada = spark.read.parquet(os.path.join(out, "audio_dedup_against"))
     assert ada.count() == kept.count()
@@ -509,23 +539,14 @@ def test_cli_audio_gate_fingerprint_reuse(spark, tmp_path):
     assert ada.filter(F.col("dup_of_ref") > F.col("clip_id")).count() == 0
 
     # run-config pin: resuming the same output WITHOUT the gate fails
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    res = subprocess.run(
-        [sys.executable, "jobs/run_pipeline.py",
-         "--input", clips, "--output", out, "--chunks", "2"],
-        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
-    )
-    assert res.returncode != 0
-    assert "run config mismatch" in (res.stderr + res.stdout)
+    with pytest.raises(RuntimeError, match="run config mismatch"):
+        _run_cli(spark, ["--input", clips, "--output", out, "--chunks", "2"])
 
 
 def test_cli_rate_gate(spark, tmp_path):
     """--rate-gate CLI leg: the committed kept set equals the library
     run with rate_gate=True (the flag really reaches pipeline_run),
     the run-config pin records it, and resuming without it refuses."""
-    import json
-    import subprocess
-
     from ungoliant_spark.plans.checkpoint import CheckpointedRun
     from ungoliant_spark.plans.pipeline import run as pipeline_run
     from ungoliant_spark.sources.fixtures import generate
@@ -534,8 +555,8 @@ def test_cli_rate_gate(spark, tmp_path):
         generate(0.001, with_labels=False), "clips.parquet"
     )
     out = str(tmp_path / "rate_out")
-    _run_cli(["--input", clips_path, "--output", out, "--chunks", "2",
-              "--rate-gate"])
+    _run_cli(spark, ["--input", clips_path, "--output", out, "--chunks", "2",
+                     "--rate-gate"])
     cfg = json.load(open(os.path.join(out, "run_config.json")))
     assert cfg["rate_gate"] is True and cfg["audio_gate"] is False
     kept = CheckpointedRun(out).kept.read(spark)
@@ -551,31 +572,12 @@ def test_cli_rate_gate(spark, tmp_path):
     # rows implausible — the gate visibly bit
     base = pipeline_run(clips).count()
     assert len(got) < base
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    res = subprocess.run(
-        [sys.executable, "jobs/run_pipeline.py",
-         "--input", clips_path, "--output", out, "--chunks", "2"],
-        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
-    )
-    assert res.returncode != 0
-    assert "run config mismatch" in (res.stderr + res.stdout)
+    with pytest.raises(RuntimeError, match="run config mismatch"):
+        _run_cli(spark, ["--input", clips_path, "--output", out,
+                         "--chunks", "2"])
 
 
-def _run_stream_cli(args: list[str]) -> str:
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    res = subprocess.run(
-        [sys.executable, "jobs/run_stream.py", *args],
-        cwd=REPO,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert res.returncode == 0, res.stderr[-2000:]
-    return res.stdout
-
-
-def test_stream_cli_audio_dedup_available_now(tmp_path):
+def test_stream_cli_audio_dedup_available_now(spark, tmp_path):
     """jobs/run_stream.py --mode audio-dedup drains a bounded input
     (--available-now) and drops the byte-identical re-upload while
     keeping every distinct clip — streaming-family job reachability."""
@@ -620,7 +622,9 @@ def test_stream_cli_audio_dedup_available_now(tmp_path):
         str(src / "part-0.parquet"),
     )
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    stdout = _run_stream_cli(
+    stdout = _run_in_process(
+        run_stream,
+        spark,
         ["--mode", "audio-dedup", "--input", str(src), "--output", out,
          "--checkpoint", ckpt, "--available-now"]
     )
@@ -640,7 +644,7 @@ def test_stream_cli_audio_dedup_available_now(tmp_path):
     assert prog["batches"] >= 1
 
 
-def test_stream_cli_quality_available_now(tmp_path):
+def test_stream_cli_quality_available_now(spark, tmp_path):
     """jobs/run_stream.py --mode quality drains the input dir through
     the full decide() surface and writes lang_bucket-partitioned kept
     rows — the online twin of the batch pipeline, job-reachable."""
@@ -655,7 +659,9 @@ def test_stream_cli_quality_available_now(tmp_path):
     src.mkdir()
     sh.copy(clips, str(src / "part-0.parquet"))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    stdout = _run_stream_cli(
+    stdout = _run_in_process(
+        run_stream,
+        spark,
         ["--mode", "quality", "--input", str(src), "--output", out,
          "--checkpoint", ckpt, "--available-now"]
     )
@@ -706,7 +712,8 @@ def test_stream_cli_text_dedup_available_now(tmp_path):
         str(src / "part-0.parquet"),
     )
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    stdout = _run_stream_cli(
+    stdout = _run_process(
+        "run_stream",
         ["--mode", "dedup", "--input", str(src), "--output", out,
          "--checkpoint", ckpt, "--available-now"]
     )

@@ -5,19 +5,17 @@ batch bounds the test session actually runs with."""
 
 from __future__ import annotations
 
+import importlib
 import os
-import sys
 
 import pandas as pd
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ungoliant_spark.plans.clips_queries import q_audio_stats, q_clips_decisions
 from ungoliant_spark.session import host_profile, usable_resources
-
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-from run_pipeline import job_session  # noqa: E402
 
 GiB = 1 << 30
 
@@ -60,15 +58,34 @@ def test_clips_queries_leave_session_confs_unchanged(spark):
 
 
 def test_submit_session_keeps_its_shuffle_settings(spark, monkeypatch):
-    """Under spark-submit the job applies only the batch bounds: a
-    shuffle partition count given as a submit flag survives."""
+    """Under spark-submit each job applies only the batch bounds: a
+    shuffle partition count given as a submit flag reaches the job
+    body. A stream freezes that count into its checkpoint as the
+    number of state partitions."""
+    jobs = {
+        "run_pipeline": ["--input", "in", "--output", "out"],
+        "run_stream": ["--mode", "dedup", "--input", "in", "--output", "out",
+                       "--checkpoint", "ckpt"],
+    }
+    seen = {}
+
+    def run_job(session, args):
+        seen["session"] = session
+        seen["shuffle"] = session.conf.get("spark.sql.shuffle.partitions")
+        seen["batch"] = session.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    # each job ends by stopping its session, here the shared one
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "13")
     try:
-        assert job_session() is spark
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
-        assert spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "8192"
+        for job, argv in jobs.items():
+            mod = importlib.import_module(f"jobs.{job}")
+            monkeypatch.setattr(mod, "run_job", run_job)
+            seen.clear()
+            assert mod.main(argv) == 0
+            assert seen == {"session": spark, "shuffle": "13", "batch": "8192"}, job
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ungoliant_spark.plans.pipeline import run as pipeline_run
-from ungoliant_spark.sources.tables import SnapshotTable
+from ungoliant_spark.sources.tables import CatalogTable, SnapshotTable
 
 
 def chunk_filter(df: DataFrame, chunk: int, n_chunks: int) -> DataFrame:
@@ -196,6 +196,47 @@ def load_or_pin_chunk_plan(
     return chunk_df, strategy
 
 
+def aux_path(output: str, name: str) -> str:
+    """Where a run's pin file lands. A path-like output gets the file
+    inside its directory; a catalog identifier like `cat.db.run` has
+    no directory, so the file is named after the identifier in the
+    CWD — unique per output, so concurrent jobs with different
+    outputs never clobber each other."""
+    if "/" in output:
+        os.makedirs(output, exist_ok=True)
+        return os.path.join(output, name)
+    return f"{output}.{name}"
+
+
+def schema_json_path(output: str) -> str:
+    return aux_path(output, "metadata_schema.json")
+
+
+def chunks_json_path(output: str) -> str:
+    return aux_path(output, "chunks.json")
+
+
+def check_chunk_pin(output: str, committed_any: bool) -> str:
+    """ADVICE r4 resume guard, for both sinks: committed chunks with no
+    chunk-plan pin must not re-pin a fresh plan — if the input listing
+    changed in between, committed chunk ids would map to different row
+    subsets (duplicated or dropped rows). For a catalog identifier the
+    pin is CWD-relative, so a resume from another working directory is
+    exactly this case. Refuses loudly, BEFORE pinning; returns the pin
+    path for :func:`load_or_pin_chunk_plan`."""
+    pin_path = chunks_json_path(output)
+    if not os.path.exists(pin_path) and committed_any:
+        raise RuntimeError(
+            f"output '{output}' already has committed chunks but no "
+            f"pinned chunk plan exists at {pin_path}. For catalog "
+            "identifiers the pin is CWD-relative: resume from the "
+            "original working directory (or copy its chunks.json "
+            "here). Refusing to re-pin a fresh plan over committed "
+            "chunks — chunk ids could map to different row subsets."
+        )
+    return pin_path
+
+
 def blocklist_hash(term_to_category: dict[str, str] | None) -> str | None:
     """Order-independent content hash of a blocklist, for the run-config
     pin: two runs gate identically iff their (term, category) sets
@@ -293,11 +334,30 @@ def metrics_of(kept: DataFrame, chunk_id: str) -> DataFrame:
 
 
 class CheckpointedRun:
+    """The one chunk loop, for both sinks. Its three tables (``kept``,
+    ``lineage``, ``metrics``) share ``SnapshotTable``'s chunk surface:
+    snapshot-manifest directories under ``out_root`` here, Iceberg
+    catalog tables through :meth:`on_catalog`. The run's pin files
+    land by :func:`aux_path`."""
+
     def __init__(self, out_root: str):
-        self.out_root = out_root
+        # absolute, so the pins land inside the output directory
+        self.output = os.path.abspath(out_root)
         self.kept = SnapshotTable(f"{out_root}/kept")
         self.lineage = SnapshotTable(f"{out_root}/lineage")
         self.metrics = SnapshotTable(f"{out_root}/metrics")
+
+    @classmethod
+    def on_catalog(cls, spark: SparkSession, output: str) -> CheckpointedRun:
+        """A run over the catalog tables ``{output}_kept``,
+        ``{output}_lineage`` and ``{output}_metrics``."""
+        run = cls.__new__(cls)
+        run.output = output
+        run.kept, run.lineage, run.metrics = (
+            CatalogTable(spark, f"{output}_{t}")
+            for t in ("kept", "lineage", "metrics")
+        )
+        return run
 
     def committed_chunks(self) -> set[str]:
         """A chunk counts as done only when ALL THREE tables have it:
@@ -308,26 +368,6 @@ class CheckpointedRun:
             self.kept.committed_chunks()
             & self.lineage.committed_chunks()
             & self.metrics.committed_chunks()
-        )
-
-    def _write_schema_json(self, kept: DataFrame) -> None:
-        """metadata_schema.json beside the sinks — the reference
-        writes it post-run (/root/reference/src/main.rs:64-69)."""
-        path = os.path.join(self.kept.root, "..", "metadata_schema.json")
-        with open(os.path.abspath(path), "w", encoding="utf-8") as f:
-            f.write(kept.schema.json())
-
-    def _chunk_plan_path(self) -> str:
-        return os.path.join(self.out_root, "chunks.json")
-
-    def _load_or_pin_chunk_plan(
-        self,
-        clips: DataFrame,
-        n_chunks: int,
-        files: list[str] | None = None,
-    ) -> tuple[Callable[[int], DataFrame], str]:
-        return load_or_pin_chunk_plan(
-            clips, n_chunks, self._chunk_plan_path(), files=files
         )
 
     def run(
@@ -343,17 +383,24 @@ class CheckpointedRun:
     ) -> set[str]:
         """Process all not-yet-committed chunks; returns chunk ids
         committed by THIS invocation. Safe to re-run after any crash."""
-        done = self.committed_chunks()
+        per_table = [
+            t.committed_chunks() for t in (self.kept, self.lineage, self.metrics)
+        ]
+        done = set.intersection(*per_table)
+        # any table's chunk, a torn one too, was made under the pins
+        started = any(per_table)
         check_or_pin_run_config(
-            os.path.join(self.out_root, "run_config.json"),
+            aux_path(self.output, "run_config.json"),
             {
                 "audio_gate": audio_gate,
                 "rate_gate": rate_gate,
                 "terms_hash": blocklist_hash(term_to_category),
             },
-            committed_any=bool(done),
+            committed_any=started,
         )
-        chunk_df, _ = self._load_or_pin_chunk_plan(clips, n_chunks, files)
+        chunk_df, _ = load_or_pin_chunk_plan(
+            clips, n_chunks, check_chunk_pin(self.output, started), files
+        )
         committed: set[str] = set()
         schema_written = False
         for chunk in range(n_chunks):
@@ -368,15 +415,20 @@ class CheckpointedRun:
                 audio_gate=audio_gate, rate_gate=rate_gate,
             ).cache()
             try:
+                out = kept.drop("sentence_langs")
                 if not schema_written:
-                    self._write_schema_json(kept.drop("sentence_langs"))
+                    # metadata_schema.json beside the sinks — the
+                    # reference writes it post-run (src/main.rs:64-69)
+                    path = schema_json_path(self.output)
+                    with open(path, "w", encoding="utf-8") as f:
+                        f.write(out.schema.json())
                     schema_written = True
                 # kept commits LAST: resume keys on the intersection,
                 # but ordering side tables first means a torn chunk
                 # can never present kept rows without their lineage
                 self.lineage.append(lineage_of(kept, chunk_id), chunk_id)
                 self.metrics.append(metrics_of(kept, chunk_id), chunk_id)
-                self.kept.append(kept.drop("sentence_langs"), chunk_id)
+                self.kept.append(out, chunk_id)
             finally:
                 kept.unpersist()
             committed.add(chunk_id)

@@ -134,3 +134,17 @@ def get_spark(
     )
     n = shuffle_partitions or 2 * spark.sparkContext.defaultParallelism
     return apply_profile(spark, n)
+
+
+def job_session(app_name: str) -> SparkSession:
+    """A job's session. Under spark-submit the JVM already exists
+    (PYSPARK_GATEWAY_PORT is set) and master, memory, shuffle partitions
+    and AQE come from the submit flags: only the profile's batch bounds
+    are applied, so a stream's state partition count, frozen into its
+    checkpoint, is the one the submit gave. Run directly from a source
+    checkout and the default 1g driver heap OOMs the vectorized parquet
+    reader on multi-MB audio rows — use the host-sized session factory
+    instead."""
+    if os.environ.get("PYSPARK_GATEWAY_PORT"):
+        return apply_profile(SparkSession.builder.appName(app_name).getOrCreate())
+    return get_spark(app_name)

@@ -22,9 +22,12 @@ re-staged on retry — exactly Iceberg's optimistic append. Resume =
 diff desired chunk ids against the snapshot summary, matching the
 north_rule "resumable from checkpoint with per-partition lineage".
 Manifests store root-relative paths (files and checksums share keys),
-so a table directory can be moved or remounted wholesale. The
-real-Iceberg path is the --format iceberg branch of
-jobs/run_pipeline.py.
+so a table directory can be moved or remounted wholesale.
+
+``CatalogTable`` is the real-Iceberg twin with the same chunk surface
+(``committed_chunks`` / ``append`` / ``read``), so
+``plans.checkpoint.CheckpointedRun`` drives either sink through one
+chunk loop (``--format iceberg`` of jobs/run_pipeline.py).
 """
 
 from __future__ import annotations
@@ -171,3 +174,58 @@ class SnapshotTable:
             with open(p) as f:
                 out.append(json.load(f))
         return out
+
+
+class CatalogTable:
+    """An Iceberg catalog table with ``SnapshotTable``'s chunk surface.
+    Each chunk lands as one ``writeTo`` snapshot whose summary property
+    ``ungoliant.chunk`` records the chunk id; the committed set is read
+    from the table's snapshot log once, then maintained in-process
+    (single writer, the same contract as ``SnapshotTable.append``)."""
+
+    def __init__(self, spark: SparkSession, name: str):
+        self.spark = spark
+        self.name = name
+        self._committed: set[str] | None = None
+
+    def _exists(self) -> bool:
+        # tableExists answers "not found" definitively; a catalog/
+        # network failure raises instead of masquerading as absence
+        return self.spark.catalog.tableExists(self.name)
+
+    def committed_chunks(self) -> set[str]:
+        # Only a genuinely missing table yields the empty set. A
+        # transient catalog error on resume must FAIL the job: an empty
+        # committed set here would re-append every chunk of the table —
+        # silent row duplication (ADVICE r3).
+        if self._committed is None:
+            rows = (
+                self.spark.sql(
+                    f"SELECT summary FROM {self.name}.snapshots"
+                ).collect()
+                if self._exists()
+                else []
+            )
+            self._committed = {
+                cid
+                for row in rows
+                if (cid := dict(row["summary"]).get("ungoliant.chunk"))
+            }
+        return set(self._committed)
+
+    def append(self, df: DataFrame, chunk_id: str) -> None:
+        """Commit one chunk as one snapshot. Skips a chunk this table
+        already has, so a torn chunk's re-run never appends its rows
+        twice (ADVICE r2)."""
+        if chunk_id in self.committed_chunks():
+            return
+        w = df.writeTo(self.name).option(
+            "snapshot-property.ungoliant.chunk", chunk_id
+        )
+        # Iceberg append() fails on a nonexistent table: the first chunk
+        # creates it (createOrReplace would wipe a resumed run's data)
+        w.append() if self._exists() else w.create()
+        self._committed.add(chunk_id)
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return spark.read.table(self.name)
